@@ -5,7 +5,8 @@ import org.apache.spark.sql.types.{DataType, Decimal, FloatType, IntegerType}
 import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String, VariantVal}
 
 /** Zero-copy `ArrayData` views over primitive arrays produced by the
-  * generator expressions ([[TokenGen]], [[EmbedGen]], [[UnpackTokens]]).
+  * generator expressions ([[TokenGen]], [[EmbedGen]]) and over the packed
+  * token bytes read by [[UnpackTokens]].
   *
   * Why: `ArrayData.toArrayData(int[])` routes through
   * `UnsafeArrayData.fromPrimitiveArray`, which copies the whole payload
@@ -17,11 +18,12 @@ import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String, VariantVal}
   * element loop), so a plain array-backed view serves them at direct
   * array-access speed with zero copies.
   *
-  * Contract: elements are non-null (`isNullAt` = false), the backing
-  * array is freshly allocated by the producer and never mutated after
-  * construction; `copy()` clones the backing array so buffering
-  * consumers (aggregates) stay independent. Mutators throw — these are
-  * value views, not buffers.
+  * Contract: elements are non-null (`isNullAt` = false), and the backing
+  * array is NEVER mutated while a view over it is reachable — it is
+  * either freshly allocated by the producer or, for [[UInt16ArrayData]],
+  * a binary value Spark already treats as immutable. `copy()` clones the
+  * backing array so buffering consumers (aggregates) stay independent.
+  * Mutators throw — these are value views, not buffers.
   */
 abstract class PrimitiveArrayData extends ArrayData {
   override def isNullAt(i: Int): Boolean = false
@@ -66,6 +68,33 @@ final class IntArrayData(val values: Array[Int]) extends PrimitiveArrayData {
   override def array: Array[Any] = values.map(v => v: Any)
   override def toIntArray(): Array[Int] = values.clone()
   override def toString: String = values.mkString("[", ",", "]")
+}
+
+/** `array<int>` view over the [[PackTokens]] transport encoding: element
+  * `i` is the little-endian uint16 at bytes `2i, 2i+1`, decoded on every
+  * `getInt` (a trailing odd byte is ignored). Reads the same values as an
+  * [[IntArrayData]] over the decoded ints without allocating or filling
+  * one; relies on the contract above — the packed bytes must not change
+  * while the view is in use. */
+final class UInt16ArrayData(val bytes: Array[Byte]) extends PrimitiveArrayData {
+  override def numElements(): Int = bytes.length / 2
+  override def getInt(i: Int): Int = Uint16LE.get(bytes, 2 * i)
+  override def getLong(i: Int): Long = getInt(i).toLong
+  override def getFloat(i: Int): Float = getInt(i).toFloat
+  override def getDouble(i: Int): Double = getInt(i).toDouble
+  override def get(i: Int, dt: DataType): AnyRef = dt match {
+    case IntegerType => Integer.valueOf(getInt(i))
+    case _ => unsupported(s"get($dt)")
+  }
+  override def copy(): ArrayData = new UInt16ArrayData(bytes.clone())
+  override def array: Array[Any] = toIntArray().map(v => v: Any)
+  override def toIntArray(): Array[Int] = {
+    val out = new Array[Int](numElements())
+    var i = 0
+    while (i < out.length) { out(i) = getInt(i); i += 1 }
+    out
+  }
+  override def toString: String = toIntArray().mkString("[", ",", "]")
 }
 
 final class FloatArrayData(val values: Array[Float]) extends PrimitiveArrayData {

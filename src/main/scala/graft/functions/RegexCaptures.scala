@@ -82,6 +82,11 @@ object RegexCaptures {
     * non-capturing `(?:` aborts the analysis entirely (a global `(?i)`
     * would make literal case non-mandatory), and runs shorter than 3
     * chars are ignored (not selective enough to pay for the scan).
+    * Shapes whose extent a character-level scan cannot be sure of also
+    * abort: escapes that take operands (`\x41`, `\u0041`, `\0101`,
+    * `\cX`, `\N{..}`, `\p{..}`/`\P{..}`, `\k<..>`, multi-digit
+    * backreferences, `\Q..\E` quoting) and a `[` inside a character class
+    * (nested classes, `&&[..]` intersections).
     * Under-approximation is always safe: the guard only ever skips the
     * matcher when the literal is ABSENT, which for a mandatory literal
     * implies no match. */
@@ -105,13 +110,22 @@ object RegexCaptures {
       if (j < n && (pattern(j) == '?' || pattern(j) == '+')) j += 1 // *?, ++, etc.
       j
     }
-    // skip a character class starting at '[' (handles leading ^/] and escapes)
+    // an escape at j (pattern(j) == '\\') whose operands follow it
+    def operandEscape(j: Int): Boolean =
+      j + 1 < n && ("xu0cNpPkQ".indexOf(pattern(j + 1)) >= 0 ||
+        (pattern(j + 1).isDigit && j + 2 < n && pattern(j + 2).isDigit))
+    // skip a character class starting at '[' (handles leading ^/] and
+    // plain escapes); n + 1 = bail out (malformed, nested, operand escape)
     def skipClass(j0: Int): Int = {
       var j = j0 + 1
       if (j < n && pattern(j) == '^') j += 1
       if (j < n && pattern(j) == ']') j += 1 // literal ] first in class
       while (j < n && pattern(j) != ']') {
-        if (pattern(j) == '\\') j += 2 else j += 1
+        if (pattern(j) == '[') return n + 1
+        if (pattern(j) == '\\') {
+          if (operandEscape(j)) return n + 1
+          j += 2
+        } else j += 1
       }
       if (j >= n) return n + 1 // malformed: force caller to bail
       j + 1
@@ -121,7 +135,9 @@ object RegexCaptures {
       if (depth > 0) {
         // inside a group: count nothing, just track nesting faithfully
         c match {
-          case '\\' => i += 2
+          case '\\' =>
+            if (operandEscape(i)) return None
+            i += 2
           case '[' =>
             i = skipClass(i); if (i > n) return None
           case '(' =>
@@ -145,6 +161,7 @@ object RegexCaptures {
           // quantifier after a group/class/anchor (atoms we never counted)
           endRun(); i = skipQuant(i)
         case '\\' =>
+          if (operandEscape(i)) return None
           if (i + 1 >= n) { endRun(); i += 1 }
           else {
             val e = pattern(i + 1)

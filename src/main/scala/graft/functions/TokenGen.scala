@@ -40,8 +40,9 @@ case class TokenGen(left: Expression, right: Expression) extends BinaryExpressio
   * `pack_tokens(token_gen(seqId, nTok))`, spec-asserted). Exists for
   * integrity checks that compare against the packed transport: the
   * two-step form allocates and round-trips a ~2 KB int array per row
-  * that the fused form never materializes (valid because the generator's
-  * vocab 50257 < 2^16 by construction). */
+  * that the fused form never materializes. Tokens of a non-negative
+  * mixed seed lie in [0, 50257) and always fit; the rest are checked and
+  * throw like `pack_tokens`. */
 case class TokenGenPacked(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "token_gen_packed"
@@ -101,38 +102,88 @@ object TokenGen {
   private final val A = 1103515245L
   private final val C = 12345L
   final val Vocab = 50257L
+  // Int twins of A, C and Vocab for the fast path (literals, so they inline)
+  private final val Ai = 1103515245
+  private final val Ci = 12345
+  private final val VocabI = 50257
 
   /** Identical math to TokenSequences / the DuckDB CTE (seqId reduced
     * mod 2^31 first so arithmetic seq_ids up to 2^53 cannot overflow):
-    * u = (s + j*48271) % M; v = u ^ (u >>> 15); t = ((v*A + C) % M) % Vocab. */
+    * s = ((seqId % M)*131071 + 524287) % M; for j = 1..nTok,
+    * u = (s + j*48271) % M; v = u ^ (u >>> 15); t = ((v*A + C) % M) % Vocab.
+    *
+    * Fast path, taken whenever the mixed seed `s` is non-negative (every
+    * non-negative seqId, and many negative ones). Exact because, with
+    * `s` in [0, 2^31), nothing in the chain is ever negative:
+    *  - `s + j*48271` lies in [0, 2^48), so `% M` is `& (M - 1)`, and
+    *    consecutive `u` differ by 48271 mod 2^31 — a running add-and-mask,
+    *    exact in wrapping `Int` arithmetic because 2^31 divides 2^32;
+    *  - `u`, and hence `v = u ^ (u >>> 15)`, lies in [0, 2^31);
+    *  - `v*A + C` lies in [0, 2^62), so `% M` keeps its low 31 bits,
+    *    which wrapping `Int` arithmetic computes exactly for the same reason;
+    *  - the result lies in [0, 2^31), so the vocab modulo runs on an `Int`.
+    * A negative `s` (only from negative seqIds) can make `u` negative, and
+    * Java's sign-following `%` then differs from a mask: that case keeps
+    * the general long-arithmetic loop ([[slowToken]]). */
   def compute(seqId: Long, nTok: Int): ArrayData = {
-    val s = ((seqId % M) * 131071L + 524287L) % M
+    val s = seed(seqId)
     val out = new Array[Int](if (nTok < 0) 0 else nTok)
-    var j = 1
-    while (j <= out.length) {
-      val u = (s + j * 48271L) % M
-      val v = u ^ (u >>> 15)
-      out(j - 1) = (((v * A + C) % M) % Vocab).toInt
-      j += 1
+    if (s >= 0) {
+      var u = s.toInt
+      var i = 0
+      while (i < out.length) {
+        u = (u + 48271) & 0x7FFFFFFF
+        out(i) = fastToken(u)
+        i += 1
+      }
+    } else {
+      var j = 1
+      while (j <= out.length) { out(j - 1) = slowToken(s, j); j += 1 }
     }
     new IntArrayData(out) // zero-copy view; see PrimitiveArrayData
   }
 
   /** [[compute]]'s chain written straight into the [[PackTokens]] uint16
-    * little-endian encoding — one 2-byte write per token, no int array. */
+    * little-endian encoding — one 2-byte store per token ([[Uint16LE]]),
+    * no int array.
+    * Fast-path tokens are in [0, Vocab) and always fit; on the general
+    * path a negative token throws exactly what `PackTokens.compute`
+    * would throw on `compute(seqId, nTok)`, so [[FusePackedTokenGen]] is a
+    * pure rewrite on every input. */
   def computePacked(seqId: Long, nTok: Int): Array[Byte] = {
-    val s = ((seqId % M) * 131071L + 524287L) % M
+    val s = seed(seqId)
     val n = if (nTok < 0) 0 else nTok
     val out = new Array[Byte](n * 2)
-    var j = 1
-    while (j <= n) {
-      val u = (s + j * 48271L) % M
-      val v = u ^ (u >>> 15)
-      val t = (((v * A + C) % M) % Vocab).toInt
-      out((j - 1) * 2) = t.toByte
-      out((j - 1) * 2 + 1) = (t >>> 8).toByte
-      j += 1
+    if (s >= 0) {
+      var u = s.toInt
+      var j = 0
+      while (j < n) {
+        u = (u + 48271) & 0x7FFFFFFF
+        Uint16LE.put(out, 2 * j, fastToken(u))
+        j += 1
+      }
+    } else {
+      var j = 1
+      while (j <= n) {
+        val t = slowToken(s, j)
+        if (t < 0 || t > 0xFFFF) throw PackTokens.outOfRange(t, j - 1)
+        Uint16LE.put(out, 2 * (j - 1), t)
+        j += 1
+      }
     }
     out
+  }
+
+  /** Fast-path token for a masked `u` in [0, 2^31). */
+  @inline private def fastToken(u: Int): Int =
+    (((u ^ (u >>> 15)) * Ai + Ci) & 0x7FFFFFFF) % VocabI
+
+  private def seed(seqId: Long): Long = ((seqId % M) * 131071L + 524287L) % M
+
+  /** Token `j` (1-based) of the chain in general long arithmetic. */
+  private def slowToken(s: Long, j: Int): Int = {
+    val u = (s + j * 48271L) % M
+    val v = u ^ (u >>> 15)
+    (((v * A + C) % M) % Vocab).toInt
   }
 }

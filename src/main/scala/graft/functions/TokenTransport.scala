@@ -58,18 +58,22 @@ object PackTokens {
         throw new IllegalArgumentException(
           s"pack_tokens: null token at index $i — token arrays are non-null by contract")
       val v = a.getInt(i)
-      if (v < 0 || v > 0xFFFF)
-        throw new IllegalArgumentException(
-          s"pack_tokens: token id $v at index $i outside uint16 — vocabulary contract violated")
-      out(i * 2) = v.toByte
-      out(i * 2 + 1) = (v >>> 8).toByte
+      if (v < 0 || v > 0xFFFF) throw outOfRange(v, i)
+      Uint16LE.put(out, 2 * i, v)
       i += 1
     }
     out
   }
+
+  private[functions] def outOfRange(v: Int, i: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"pack_tokens: token id $v at index $i outside uint16 — vocabulary contract violated")
 }
 
-/** Inverse of [[PackTokens]]; output element type is non-null int32. */
+/** Inverse of [[PackTokens]]; output element type is non-null int32.
+  * The result is a zero-copy view over the packed bytes, which Spark
+  * never mutates once a binary value is produced (UnsafeRow.getBinary
+  * hands out a fresh copy). */
 case class UnpackTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "unpack_tokens"
@@ -91,14 +95,7 @@ object UnpackTokens {
   def apply(packed: Column): Column =
     Bridge.column(UnpackTokens(Bridge.expression(packed)))
 
-  def compute(b: Array[Byte]): ArrayData = {
-    val n = b.length / 2
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      out(i) = (b(i * 2) & 0xFF) | ((b(i * 2 + 1) & 0xFF) << 8)
-      i += 1
-    }
-    new IntArrayData(out) // zero-copy view; see PrimitiveArrayData
-  }
+  /** A view that decodes on read — no int array is built (see
+    * [[UInt16ArrayData]]; `b` must not be mutated afterwards). */
+  def compute(b: Array[Byte]): ArrayData = new UInt16ArrayData(b)
 }

@@ -49,6 +49,46 @@ class RegexGuardSpec extends SparkSpec {
     assert(lit("x ingest\\[(\\d+)\\]: y") === Some("x ingest["))
   }
 
+  test("derivation on the sqlgrep DDL patterns of the log benchmark") {
+    assert(lit("ingest\\[(\\d+)\\]: sequence (doc-\\d+) from (\\S+) n_tok=(\\d+)") ===
+      Some("]: sequence "))
+    assert(lit("dim (\\S+) region (\\S+) tier (\\d+)") === Some(" region "))
+  }
+
+  // Each pattern matches its line; a guard derived from operand text or
+  // from a nested class's inner `]` would reject it.
+  private val operandShapes = Seq(
+    "\\x41bcd" -> "Abcd",
+    "\\u0041bcd" -> "Abcd",
+    "[a[b]]cde" -> "bcde",
+    "[a-z&&[^aeiou]]xyz" -> "bxyz",
+    "\\0101bcd" -> "Abcd",
+    "\\cAbcd" -> "\u0001bcd",
+    "\\x{41}bcd" -> "Abcd",
+    "\\p{Lu}bcd" -> "Abcd",
+    "\\N{LATIN CAPITAL LETTER A}bcd" -> "Abcd",
+    "\\Qa.b\\Ecde" -> "a.bcde",
+    "(a)(b)(c)(d)(e)(f)(g)(h)(i)(j)(k)(l)\\12xyz" -> "abcdefghijkllxyz",
+    "[\\x5d]]abc" -> "]]abc",
+    "(\\x41)bcd" -> "Abcd")
+
+  test("derivation bails on operand escapes, quoting and nested classes") {
+    operandShapes.foreach { case (p, line) =>
+      assert(java.util.regex.Pattern.compile(p).matcher(line).find(), p)
+      assert(lit(p) === None, p)
+    }
+    // single-character escapes and plain classes still derive a guard
+    assert(lit("\\d+ took \\w+") === Some(" took "))
+    assert(lit("[a-z]+ tail\\.log") === Some(" tail.log"))
+  }
+
+  test("operand escapes and nested classes: no matching line is rejected") {
+    operandShapes.foreach { case (p, line) =>
+      val got = Seq(line).toDF("line").select(RegexCaptures(col("line"), p).as("c")).head()
+      assert(!got.isNullAt(0), s"guard rejected a matching line: $p on $line")
+    }
+  }
+
   test("guarded extraction is bit-identical to a bare regex run") {
     val patterns = Seq(LogPipeline.ingestRegex, LogPipeline.bulkRegex,
       LogPipeline.auditRegex,
