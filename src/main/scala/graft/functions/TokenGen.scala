@@ -72,7 +72,14 @@ object TokenGenPacked {
   * which is why this is an optimizer rewrite rather than an API-level
   * substitution: callers compose `PackTokens(col("tokens"))` over an
   * arbitrary input column and the fusion fires exactly when that column
-  * IS the generator. */
+  * IS the generator.
+  *
+  * Enabled in every session by [[graft.GraftExtensions]], which the
+  * classpath service file
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`
+  * names; no library call has to register it. Disable it per session
+  * with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.functions.FusePackedTokenGen`. */
 object FusePackedTokenGen
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
@@ -81,14 +88,6 @@ object FusePackedTokenGen
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
       case PackTokens(TokenGen(seqId, nTok)) => TokenGenPacked(seqId, nTok)
-    }
-
-  /** Idempotently attach to the session's experimental optimizer rules. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(this))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ this
     }
 }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,14 +33,12 @@ object LogPipeline {
 
   // ---------------------------------------------------------------- render
 
-  private val monthNames = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-    "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-
   /** Line-class rule (disjoint, priority audit > bulk > ingest):
     * audit = __r3 % 37 == 0 (~2.7%), bulk = n_tok >= 512, else ingest.
     *
     * Rendered by the codegen [[graft.functions.RenderLine]] expression —
-    * byte-identical to [[renderLinesFormatString]] (spec-asserted), which
+    * byte-identical to the `format_string` chain it replaced (kept in test
+    * sources as `PipelineReference.renderLinesFormatString`), which
     * allocated a `java.util.Formatter` + boxed args per row: pure
     * memory-bus churn the wide parallelism level pays twice (GC +
     * bandwidth), i.e. exactly the shared resource limiting N→4N scaling
@@ -48,36 +46,6 @@ object LogPipeline {
   def renderLines(seqs: DataFrame): DataFrame =
     seqs.withColumn("line", graft.functions.RenderLine(
       col("doc_id"), col("source"), col("n_tok"), col("__r3")))
-
-  /** The original declarative formulation, kept as the parity oracle for
-    * [[graft.functions.RenderLine]] (PipelineSpec asserts byte equality
-    * on a deterministic sample). */
-  private[graft] def renderLinesFormatString(seqs: DataFrame): DataFrame = {
-    val r3 = col("__r3")
-    // explicit integer division (Column `/` is double division)
-    def idiv(x: Column, d: Long): Column = (x / d).cast(LongType)
-    val day = (r3 % 28 + 1).cast(IntegerType)
-    val hour = (idiv(r3, 28) % 24).cast(IntegerType)
-    val minute = (idiv(r3, 672) % 60).cast(IntegerType)
-    val second = (idiv(r3, 40320) % 60).cast(IntegerType)
-    val monthIdx = (idiv(r3, 2419200L) % 12).cast(IntegerType)
-    val month = element_at(array(monthNames.map(lit): _*), monthIdx + 1)
-    val pid = (r3 % 9000 + 1000).cast(IntegerType)
-    val node = concat(lit("node"), (r3 % 16).cast(StringType))
-    val isAudit = r3 % 37 === 0
-    val isBulk = col("n_tok") >= 512
-    val line = when(isAudit,
-        format_string("AUDIT|%s|%s|%d|ok", col("doc_id"), col("source"), col("n_tok")))
-      .when(isBulk,
-        format_string("%s %d %02d:%02d:%02d 2024 %s bulk[%d]: batch %s src=%s toks=%d",
-          month, day, hour, minute, second, node, pid,
-          col("doc_id"), col("source"), col("n_tok")))
-      .otherwise(
-        format_string("%s %d %02d:%02d:%02d 2024 %s ingest[%d]: sequence %s from %s n_tok=%d",
-          month, day, hour, minute, second, node, pid,
-          col("doc_id"), col("source"), col("n_tok")))
-    seqs.withColumn("line", line)
-  }
 
   // ----------------------------------------------------------------- parse
 
@@ -215,15 +183,14 @@ object LogPipeline {
   def parseEnrichRoute(spark: SparkSession, seqs: DataFrame,
       partitions: Int, packTransport: Boolean = false,
       unpackAfter: Boolean = true): DataFrame = {
-    graft.functions.FusePackedTokenGen.register(spark)
     // packTransport packs AT THE RENDER SELECT (round 6), not just below
     // the route exchange: the pack then composes directly over the
-    // generator expression in the collapsed projection, where
-    // [[graft.functions.FusePackedTokenGen]] rewrites
-    // pack_tokens(token_gen(..)) into the fused token_gen_packed — the
-    // ~2 KB int-array intermediate per row is never materialized on the
-    // map side. Packed-vs-exchange placement is unchanged (pack below,
-    // unpack above; PlanQualitySpec).
+    // generator expression in the collapsed projection, where the
+    // session's [[graft.functions.FusePackedTokenGen]] rule (loaded by
+    // [[graft.GraftExtensions]]) rewrites pack_tokens(token_gen(..)) into
+    // the fused token_gen_packed — the ~2 KB int-array intermediate per
+    // row is never materialized on the map side. Packed-vs-exchange
+    // placement is unchanged (pack below, unpack above; PlanQualitySpec).
     val rendered = renderLines(seqs).select(col("line"),
       (if (packTransport) graft.functions.PackTokens(col("tokens"))
        else col("tokens")).as("tokens_in"))

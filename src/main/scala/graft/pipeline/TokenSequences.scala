@@ -16,13 +16,8 @@ import org.apache.spark.sql.types._
   */
 object TokenSequences {
 
-  private val M = 2147483648L // 2^31
-  private val A = 1103515245L
-  private val C = 12345L
   val VocabSize = 50257L
   val MaxTok = 2048
-
-  private def lcg(x: Column): Column = (x * A + C) % M
 
   /** Adds doc_id/tokens/n_tok/source columns derived from a 64-bit
     * `seqId` column. The first mixing step reduces seqId mod 2^31 before
@@ -31,9 +26,11 @@ object TokenSequences {
     * ~2^53) and DuckDB errors (rather than wraps) on BIGINT overflow.
     *
     * Since round 6 the whole tuple is ONE codegen'd
-    * [[graft.functions.SeqMeta]] call (bit-identical math,
-    * spec-asserted): the previous per-column arithmetic re-inlined the
-    * LCG chain into every consumer after CollapseProject and pushed the
+    * [[graft.functions.SeqMeta]] call (bit-identical math, spec-asserted
+    * against the declarative chain kept in test sources as
+    * `PipelineReference.withSequenceColumnsDeclarative`): the previous
+    * per-column arithmetic re-inlined the LCG chain into every consumer
+    * after CollapseProject and pushed the
     * fused map-stage method over the JVM's 8 KB JIT compile limit — the
     * whole generate→render→parse stage ran INTERPRETED (see SeqMeta's
     * scaladoc for the measurements). The five GetStructField readers
@@ -51,29 +48,6 @@ object TokenSequences {
       .withColumn("tokens", graft.functions.TokenGen(seqId, meta.getField("n_tok")))
       .withColumn("source", meta.getField("source"))
       .withColumn("__r3", meta.getField("r3")) // routing entropy, dropped by callers
-  }
-
-  /** The pre-round-6 declarative formulation, kept as the parity oracle
-    * for [[graft.functions.SeqMeta]] (PipelineSpec asserts field-level
-    * equality across a range of seqIds incl. the arithmetic-id extremes). */
-  private[graft] def withSequenceColumnsDeclarative(df: DataFrame, seqId: Column,
-      maxTok: Int = MaxTok): DataFrame = {
-    val s = ((seqId % M) * 131071L + 524287L) % M
-    val r1 = lcg(s)
-    val r2 = lcg(r1)
-    val r3 = lcg(r2)
-    val nTok = least(lit(8) + (r1 % 45) * (r2 % 46), lit(maxTok))
-      .cast(IntegerType)
-    val source = when(r2 % 100 < 45, lit("web"))
-      .when(r2 % 100 < 62, lit("books"))
-      .when(r2 % 100 < 72, lit("code"))
-      .otherwise(concat(lit("src"), (r2 % 17).cast(StringType)))
-    val tokens = graft.functions.TokenGen(seqId, nTok)
-    df.withColumn("doc_id", graft.functions.DocId(seqId))
-      .withColumn("n_tok", nTok)
-      .withColumn("tokens", tokens)
-      .withColumn("source", source)
-      .withColumn("__r3", r3)
   }
 
   /** Oracle-able variant: sequences derived 1:1 from `lineitem` rows so
@@ -121,18 +95,10 @@ object TokenSequences {
   }
 
   /** Scale variant for bench: n rows straight from `spark.range` —
-    * embarrassingly parallel, zero input IO, any target size.
-    *
-    * `maxTok` caps `n_tok` (payload-sweep diagnostic: running the SAME
-    * pipeline pair at shrinking token payloads separates the plan's
-    * intrinsic N→4N scaling from the host's shared-bus ceiling — the
-    * per-row work outside the token payload is unchanged, so any
-    * efficiency recovered as bytes/row shrink was bus-bound, not
-    * plan-bound). Default leaves the BASELINE distribution untouched. */
-  def synthetic(spark: SparkSession, n: Long, partitions: Int,
-      maxTok: Int = MaxTok): DataFrame = {
+    * embarrassingly parallel, zero input IO, any target size. */
+  def synthetic(spark: SparkSession, n: Long, partitions: Int): DataFrame = {
     val base = spark.range(0, n, 1, partitions).select(col("id").as("seq_id"))
-    withSequenceColumns(base, col("seq_id"), maxTok)
+    withSequenceColumns(base, col("seq_id"))
       .select("doc_id", "tokens", "n_tok", "source", "__r3")
   }
 

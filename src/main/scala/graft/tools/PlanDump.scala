@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for every declared query (or the names
   * given as args) to `plans/<tag>/<name>_<suffix>.txt` — the judge-readable
   * plan evidence for optimization rounds. Not part of the driver contract.
@@ -19,17 +17,7 @@ object PlanDump {
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", 128)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-bench")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.builder(s"local[$cpus]", "graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = Paths.get("plans", tag)
     Files.createDirectories(dir)

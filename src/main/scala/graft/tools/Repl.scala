@@ -185,13 +185,8 @@ object Repl {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"), shufflePartitions = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val code = run(spark, args)
     spark.stop()

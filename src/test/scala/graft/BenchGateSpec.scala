@@ -126,6 +126,13 @@ class BenchGateSpec extends AnyFunSuite {
       memCeil = 0.549) === "contended")
   }
 
+  test("scaling phases are refused when the 4N level is wider than the host") {
+    assert(ScalingGate.scalingSkipped(coresN = 4, hostCores = 4) === Some("4N>host_cores"))
+    assert(ScalingGate.scalingSkipped(coresN = 4, hostCores = 15) === Some("4N>host_cores"))
+    assert(ScalingGate.scalingSkipped(coresN = 4, hostCores = 16) === None)
+    assert(ScalingGate.scalingSkipped(coresN = 1, hostCores = 4) === None)
+  }
+
   test("MemSweep produces a positive, finite sweep time (ceiling probe substrate)") {
     val t = MemSweep.sweep(2)
     assert(t > 0.0 && t < 60.0, s"implausible sweep time $t")

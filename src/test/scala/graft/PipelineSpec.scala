@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{LogPipeline, PipelineJob, TokenSequences}
+import graft.pipeline.{LogPipeline, PipelineJob, PipelineReference, TokenSequences}
 import graft.table.ManifestTable
 
 /** North-rule pipeline behavior: per-sink parity, token-array equality,
@@ -40,8 +40,7 @@ class PipelineSpec extends SparkSpec {
     for (cap <- Seq(TokenSequences.MaxTok, 64)) {
       val a = TokenSequences.withSequenceColumns(ids, col("seq_id"), cap)
         .orderBy(col("seq_id")).collect()
-      val b = graft.pipeline.TokenSequences
-        .withSequenceColumnsDeclarative(ids, col("seq_id"), cap)
+      val b = PipelineReference.withSequenceColumnsDeclarative(ids, col("seq_id"), cap)
         .orderBy(col("seq_id")).collect()
       assert(a.length === b.length)
       a.zip(b).foreach { case (x, y) =>
@@ -59,7 +58,7 @@ class PipelineSpec extends SparkSpec {
     // 5k rows cover all three line classes (audit ~2.7%, bulk, ingest),
     // 1-vs-2-digit days/nodes, and zero-padded time fields
     val a = LogPipeline.renderLines(seqs).select(col("line"))
-    val b = LogPipeline.renderLinesFormatString(seqs).select(col("line"))
+    val b = PipelineReference.renderLinesFormatString(seqs).select(col("line"))
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
     // all three classes actually present in the sample
@@ -193,12 +192,19 @@ class PipelineSpec extends SparkSpec {
 
   test("TokenGenPacked is byte-identical to pack_tokens(token_gen(...))") {
     import graft.functions.{PackTokens, TokenGenPacked}
-    val both = seqs.limit(2000).select(
-      TokenGenPacked(substring(col("doc_id"), 5, 24).cast("long"), col("n_tok")).as("a"),
-      PackTokens(graft.functions.TokenGen(
-        substring(col("doc_id"), 5, 24).cast("long"), col("n_tok"))).as("b"))
-    assert(both.filter(col("a") =!= col("b")).count() === 0)
-    assert(both.count() === 2000)
+    // the session fuses pack_tokens(token_gen(..)) into token_gen_packed,
+    // so the reference `b` is evaluated with that rule excluded —
+    // otherwise both columns run the fused expression
+    withoutTokenFusion {
+      val both = seqs.limit(2000).select(
+        TokenGenPacked(substring(col("doc_id"), 5, 24).cast("long"), col("n_tok")).as("a"),
+        PackTokens(graft.functions.TokenGen(
+          substring(col("doc_id"), 5, 24).cast("long"), col("n_tok"))).as("b"))
+      val plan = both.queryExecution.optimizedPlan.toString()
+      assert(plan.contains("pack_tokens(token_gen("), s"reference was fused:\n$plan")
+      assert(both.filter(col("a") =!= col("b")).count() === 0)
+      assert(both.count() === 2000)
+    }
   }
 
   test("snapshot write + commit + time-travel read") {

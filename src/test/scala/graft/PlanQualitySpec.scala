@@ -84,6 +84,22 @@ class PlanQualitySpec extends SparkSpec {
       s"FusePackedTokenGen did not fire on the generator input:\n$plan")
   }
 
+  test("the session fuses pack_tokens(token_gen) without any pipeline call") {
+    // GraftExtensions is loaded into every session from the classpath
+    // service file, so sessions this library does not build (the
+    // benchmark's own) get the rule too; excludedRules turns it off
+    import graft.functions.{PackTokens, TokenGen}
+    def optimized(): String = spark.range(0, 10)
+      .select(PackTokens(TokenGen(col("id"), lit(16))).as("p"))
+      .queryExecution.optimizedPlan.toString()
+    val fused = optimized()
+    assert(fused.contains("token_gen_packed(") && !fused.contains("pack_tokens("),
+      s"fusion did not fire:\n$fused")
+    val plain = withoutTokenFusion(optimized())
+    assert(plain.contains("pack_tokens(token_gen(") && !plain.contains("token_gen_packed"),
+      s"excludedRules did not disable the fusion:\n$plain")
+  }
+
   test("parse row-match runs as a fenced projection column, not a pushed filter") {
     // Round-6 JIT-limit fix regression guard: expressed as a plain
     // filter, the row-match predicate is pushed into the extraction

@@ -5,14 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder("local[4]", shufflePartitions = 4)
+      .appName("graft-test")
+      .getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -20,5 +16,13 @@ trait SparkSpec extends AnyFunSuite {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Evaluates `f` with the session's FusePackedTokenGen rule excluded,
+    * through Spark's own `spark.sql.optimizer.excludedRules`. */
+  def withoutTokenFusion[T](f: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, "graft.functions.FusePackedTokenGen")
+    try f finally spark.conf.unset(key)
   }
 }
