@@ -90,7 +90,6 @@ object Bench {
   // enough (~30k rows ≈ 0.5s) that 32 workers stay fed. 256 input tasks
   // = 4x+ the max core count (both levels task-bound, not file-bound).
   private val InputParts = 256
-  private val ShuffleParts = BenchSession.ShufflePartitions
 
   private val startNanos = System.nanoTime()
   private def elapsed(): Double = (System.nanoTime() - startNanos) / 1e9
@@ -111,7 +110,7 @@ object Bench {
   }
 
   private def session(cores: Int): SparkSession =
-    BenchSession.builder(s"local[$cores]", s"graft-bench-$cores", ShuffleParts).getOrCreate()
+    BenchSession.builder(s"local[$cores]", s"graft-bench-$cores").getOrCreate()
 
   /** One measured pass at `cores`, dispatched per SPARK_GRAFT_FORK:
     *
@@ -156,8 +155,9 @@ object Bench {
     try {
       // JIT/codegen warm: 1M rows is plenty to compile the stage; more
       // just burns wall-clock budget at the 4-core level
-      BenchRun.pass(spark, mode, math.min(rows / 8, 1000000L), InputParts, ShuffleParts)
-      val t = BenchRun.pass(spark, mode, rows, InputParts, ShuffleParts)
+      val parts = BenchSession.ShufflePartitions
+      BenchRun.pass(spark, mode, math.min(rows / 8, 1000000L), InputParts, parts)
+      val t = BenchRun.pass(spark, mode, rows, InputParts, parts)
       // shuffle files on tmpfs are deleted only when the ShuffleDependency
       // is GC'd — force it so the next run doesn't fight tmpfs reclaim
       System.gc()
@@ -189,7 +189,7 @@ object Bench {
       "-Xms12g", "-Xmx12g", "-XX:+UseParallelGC",
       s"-XX:ActiveProcessorCount=$cores",
       "-cp", cp, "graft.BenchRun", mode, cores.toString, rows.toString,
-      InputParts.toString, ShuffleParts.toString)
+      InputParts.toString, BenchSession.ShufflePartitions.toString)
     val cmd = if (cluster) jvm else pin ++ jvm
     val extraEnv =
       if (cluster) Seq("SPARK_GRAFT_EXEC_CORES" -> "4",
@@ -727,10 +727,12 @@ object Bench {
     // default 4 vs 16: a true 4x core ratio with headroom on the
     // 32-core box, so transient host contention doesn't alias into the
     // oversubscribed level
-    val coresN = sys.env.getOrElse("SPARK_GRAFT_CORES_N", "4").toInt
+    val coresNSpec = sys.env.getOrElse("SPARK_GRAFT_CORES_N", "4")
     val scalingOn = !sys.env.get("SPARK_GRAFT_SCALING").contains("off")
-    val scalingSkipped =
-      if (scalingOn) ScalingGate.scalingSkipped(coresN, hostCores) else None
+    // a malformed value is only parsed strictly once phases 2-3 start,
+    // so it can never cost the phase-1 lines
+    val scalingSkipped = if (!scalingOn) None
+      else coresNSpec.toIntOption.flatMap(ScalingGate.scalingSkipped(_, hostCores))
     val host = s""""kernel":"$kernel","host_cores":$hostCores""" +
       scalingSkipped.map(r => s""","scaling_skipped":"$r"""").getOrElse("")
 
@@ -777,6 +779,7 @@ object Bench {
     emitLines()
 
     if (scalingOn && scalingSkipped.isEmpty) {
+      val coresN = coresNSpec.toInt
       HostProbe.warm(coresN); HostProbe.warm(coresN * 4)
       // seed the in-process bracket probe's session bests at both widths
       // (the grading ceiling runs in a forked JVM and no longer does)

@@ -9,8 +9,7 @@ package graft
   *
   * Usage: runMain graft.BenchExtra [reps] [query...]  (default: all)
   * Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *        SPARK_GRAFT_CPUS   (default 32),
-  *        SPARK_GRAFT_CONF   (extra session confs, as for [[Bench]])
+  *        SPARK_GRAFT_CPUS   (default 32)
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {

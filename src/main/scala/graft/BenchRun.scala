@@ -28,7 +28,7 @@ object BenchRun {
     val cores = args(1).toInt
     val rows = args(2).toLong
     val inputParts = args.lift(3).map(_.toInt).getOrElse(256)
-    val shuffleParts = args.lift(4).map(_.toInt).getOrElse(128)
+    val shuffleParts = args.lift(4).map(_.toInt).getOrElse(BenchSession.ShufflePartitions)
     val warmRows = math.max(math.min(rows / 8, 2000000L), 1L)
 
     // Cluster simulation: with SPARK_GRAFT_EXEC_CORES set, run a

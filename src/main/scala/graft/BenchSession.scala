@@ -9,20 +9,8 @@ object BenchSession {
 
   val ShufflePartitions = 128
 
-  /** Extra session confs from `SPARK_GRAFT_CONF="k=v;k=v"` — for
-    * interleaved A/B of shuffle/codec knobs (e.g.
-    * `spark.io.compression.zstd.level=3`) without a recompile. Empty by
-    * default, so default bench runs are unaffected. */
-  val extraConfs: Map[String, String] = parseConfs(sys.env.get("SPARK_GRAFT_CONF"))
-
-  def parseConfs(spec: Option[String]): Map[String, String] =
-    spec.map(_.split(';').toSeq
-      .filter(_.contains('='))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k.trim -> v.trim }
-      .toMap).getOrElse(Map.empty)
-
-  /** The bench-only settings; `extra` is applied last and wins. */
-  def settings(extra: Map[String, String]): Map[String, String] = Map(
+  /** The bench-only settings. */
+  val settings: Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "true",
     // shuffle files on tmpfs: one box has one disk; writeback storms
     // would otherwise dominate and hide the CPU scaling being measured
@@ -33,11 +21,11 @@ object BenchSession {
     // 64-92s lz4 vs 29-38s zstd, 4-core 133s vs 104s. Cuts bytes
     // through the narrowest resource at BOTH sandbox and cluster scale
     // (a real cluster shuffles those bytes over NICs).
-    "spark.io.compression.codec" -> "zstd") ++ extra
+    "spark.io.compression.codec" -> "zstd")
 
   def builder(master: String, appName: String,
       shufflePartitions: Int = ShufflePartitions): SparkSession.Builder =
     GraftSession.builder(master, shufflePartitions)
       .appName(appName)
-      .config(settings(extraConfs))
+      .config(settings)
 }
