@@ -81,5 +81,7 @@ object Aggregates {
           org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.PrimitiveDoubleEncoder,
           containsNull = false, lenientSerialization = false))
     def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
+    // printed in plans: a stable name instead of the identity hash
+    override def toString: String = s"PercentileExact($p)"
   }
 }

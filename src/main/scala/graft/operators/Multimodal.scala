@@ -90,11 +90,20 @@ object Multimodal {
       .repartition(partitions, col("__respray"))
     bucketed.select(col("media_id"), col("kind"), col("payload"))
       .as[(Long, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, kind, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          MediaFeatures(id, kind, bytes.length, decoder.decode(kind, bytes))
-        }
+      .mapPartitions(new DecodePartition(decoder))
+  }
+
+  /** The per-partition decode step. A named function class rather than a
+    * lambda, so the plan prints a stable name instead of an identity hash. */
+  final class DecodePartition(decoder: Decoder)
+      extends (Iterator[(Long, String, Array[Byte])] => Iterator[MediaFeatures])
+      with Serializable {
+    def apply(it: Iterator[(Long, String, Array[Byte])]): Iterator[MediaFeatures] =
+      it.map { case (id, kind, payload) =>
+        val bytes = if (payload == null) Array.emptyByteArray else payload
+        MediaFeatures(id, kind, bytes.length, decoder.decode(kind, bytes))
       }
+    override def toString: String =
+      s"DecodePartition(${decoder.getClass.getName.stripSuffix("$")})"
   }
 }

@@ -25,6 +25,26 @@ object Expr {
   /** EXTRACT(part FROM ts) sugar (reference parser.rs:966-988). */
   final case class Extract(part: String, from: Expr) extends Expr
   case object Wildcard extends Expr
+
+  /** Direct subexpressions of `e`, left to right. */
+  def children(e: Expr): Seq[Expr] = e match {
+    case Bin(_, l, r) => Seq(l, r)
+    case Neg(x) => Seq(x)
+    case Not(x) => Seq(x)
+    case Is(l, r, _) => Seq(l, r)
+    case In(x, list, _) => x +: list
+    case Index(a, i) => Seq(a, i)
+    case Cast(x, _) => Seq(x)
+    case Call(_, args, _) => args
+    case CaseWhen(cs, o) => cs.flatMap { case (c, v) => Seq(c, v) } :+ o
+    case ArrayLit(items) => items
+    case Extract(_, x) => Seq(x)
+    case _: Lit | _: ColRef | Wildcard => Nil
+  }
+
+  /** True when `p` holds for `e` or any expression nested in it. */
+  def exists(e: Expr)(p: Expr => Boolean): Boolean =
+    p(e) || children(e).exists(exists(_)(p))
 }
 
 final case class JoinClause(

@@ -4,9 +4,15 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.parse.Extractor
+
+/** Per-query execution statistics (reference `--show-run-stats`,
+  * `src/executor.rs:12-36`). */
+final case class RunStats(seconds: Double, linesProcessed: Long,
+    bytesProcessed: Long, rowsMatched: Long)
 
 /** The user-facing engine: a drop-in for the reference CLI's capability
   * surface — register CREATE TABLE extraction DSL, run SELECT queries
@@ -19,20 +25,37 @@ import graft.parse.Extractor
   * val df = eng.query("SELECT hostname, COUNT() FROM connections GROUP BY hostname",
   *                    spark.read.text("ftpd.log"))
   * }}}
+  *
+  * A table's parse is materialized once per cached input: from the
+  * second query over the same cached `lines` object on, a SELECT that
+  * does not read `input` scans the table's extracted columns, kept with
+  * `Dataset.cache()`, instead of re-running the regex extraction. The
+  * first query, uncached or streaming input, `::'file'` sources, the
+  * join side and [[queryWithStats]] run the extraction as before.
   */
-/** Per-query execution statistics (reference `--show-run-stats`,
-  * `src/executor.rs:12-36`). */
-final case class RunStats(seconds: Double, linesProcessed: Long,
-    bytesProcessed: Long, rowsMatched: Long)
-
 final class SqlEngine(spark: SparkSession) {
   private val tables = mutable.LinkedHashMap[String, TableDef]()
 
+  /** The input last queried per table; `parsed` is its materialized
+    * parse once a second query over it has run. */
+  private final class Parse(val input: DataFrame) {
+    var parsed: Option[DataFrame] = None
+  }
+  private val parses = mutable.HashMap[String, Parse]()
+
   def addTables(ddl: String): Seq[String] = {
     val defs = Parser.parseTableDefs(ddl)
-    defs.foreach(t => tables(t.name) = t)
+    defs.foreach(define)
     defs.map(_.name)
   }
+
+  private def define(td: TableDef): Unit = {
+    release(td.name)
+    tables(td.name) = td
+  }
+
+  private def release(table: String): Unit =
+    parses.remove(table).foreach(_.parsed.foreach(_.unpersist()))
 
   def tableDef(name: String): TableDef =
     tables.getOrElse(name, throw new IllegalArgumentException(s"unknown table: $name"))
@@ -59,7 +82,7 @@ final class SqlEngine(spark: SparkSession) {
     }
     var last: Option[DataFrame] = None
     flatten(Parser.parse(input)).foreach {
-      case Statement.CreateTable(td) => tables(td.name) = td
+      case Statement.CreateTable(td) => define(td)
       case Statement.Select(sel) => last = Some(runSelect(sel, lines, joinLines))
       case Statement.Multiple(_) => () // unreachable after flatten
     }
@@ -102,9 +125,10 @@ final class SqlEngine(spark: SparkSession) {
   private def runSelect(stmt: SelectStmt, lines: DataFrame,
       joinLines: Option[DataFrame]): DataFrame = {
     val td = tableDef(stmt.from)
-    val fromLines = stmt.fromFile.map(f => spark.read.text(f)).getOrElse(lines)
-    val parsed = Extractor.parse(fromLines.toDF("value"), td,
-      keepInput = true)
+    val parsed = stmt.fromFile match {
+      case Some(f) => Extractor.parse(spark.read.text(f).toDF("value"), td, keepInput = true)
+      case None => fromTable(td, lines, readsInput(stmt))
+    }
 
     // scope: bare + qualified names for the FROM table, plus `input`;
     // the parallel ValueType map lets the Translator see INTERVAL (which
@@ -177,6 +201,35 @@ final class SqlEngine(spark: SparkSession) {
 
     if (!isAggregate) runSimple(stmt, filtered, trans, projOrder)
     else runAggregate(stmt, filtered, trans, scope)
+  }
+
+  /** The FROM table's rows over `lines`. The first query over a cached
+    * `lines` object records it; later queries over the same object that
+    * do not read `input` share one cached parse without the `input`
+    * column. A different or uncached input releases that parse. */
+  private def fromTable(td: TableDef, lines: DataFrame, readsInput: Boolean): DataFrame = {
+    val cached = lines.storageLevel != StorageLevel.NONE
+    val seen = parses.get(td.name).filter(p => cached && (p.input eq lines))
+    if (seen.isEmpty) {
+      release(td.name)
+      if (cached) parses(td.name) = new Parse(lines)
+    }
+    seen match {
+      case Some(p) if !readsInput =>
+        if (p.parsed.isEmpty) p.parsed = Some(Extractor.parse(lines.toDF("value"), td).cache())
+        p.parsed.get
+      case _ => Extractor.parse(lines.toDF("value"), td, keepInput = true)
+    }
+  }
+
+  /** True when the statement reads the `input` pseudo-column. */
+  private def readsInput(stmt: SelectStmt): Boolean = {
+    val exprs = stmt.projections.map(_._2) ++ stmt.where ++
+      stmt.groupBy.getOrElse(Nil) ++ stmt.having
+    exprs.exists(Expr.exists(_) {
+      case Expr.ColRef("input", _) => true
+      case _ => false
+    }) || stmt.join.exists(j => j.leftColumn._2 == "input" || j.rightColumn._2 == "input")
   }
 
   // ---------------------------------------------------------- simple path

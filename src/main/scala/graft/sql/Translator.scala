@@ -279,19 +279,7 @@ final class Translator(base: DataFrame, scope: Map[String, Column],
   def findAggregates(e: Expr): Seq[Call] = e match {
     case c @ Call(n, args, _) if aggregateNames.contains(n) =>
       Seq(c) ++ args.flatMap(findAggregates)
-    case Call(_, args, _) => args.flatMap(findAggregates)
-    case Bin(_, l, r) => findAggregates(l) ++ findAggregates(r)
-    case Neg(x) => findAggregates(x)
-    case Not(x) => findAggregates(x)
-    case Is(l, r, _) => findAggregates(l) ++ findAggregates(r)
-    case In(x, list, _) => findAggregates(x) ++ list.flatMap(findAggregates)
-    case Index(a, i) => findAggregates(a) ++ findAggregates(i)
-    case Cast(x, _) => findAggregates(x)
-    case CaseWhen(cs, o) =>
-      cs.flatMap { case (c, v) => findAggregates(c) ++ findAggregates(v) } ++ findAggregates(o)
-    case ArrayLit(items) => items.flatMap(findAggregates)
-    case Extract(_, x) => findAggregates(x)
-    case _ => Nil
+    case other => Expr.children(other).flatMap(findAggregates)
   }
 
   /** Replace a specific aggregate call / group-key subtree with a column

@@ -31,6 +31,33 @@ class PlanQualitySpec extends SparkSpec {
     assert(nCols <= 5, s"scan reads $nCols cols: $readSchema")
   }
 
+  test("a scan filter below an OptimizerFence still reaches the parquet scan") {
+    // The fence blocks predicate pushdown through its projection, so a
+    // scan-prunable predicate must be applied below it, as q_curate's
+    // shape allows. Written above the fenced projection it would stay a
+    // FilterExec over an unfiltered scan (PushedFilters: []).
+    val keep = graft.functions.OptimizerFence(
+      col("l_returnflag") =!= "A" && col("l_discount") < 0.09)
+    val df = spark.read.parquet(s"$dir/lineitem.parquet")
+      .filter(col("l_quantity") > 10)
+      .withColumn("__keep", keep).filter(col("__keep")).drop("__keep")
+    val plan = executedPlan(df)
+    assert(plan.contains("opt_fence("), s"fence missing:\n$plan")
+    assert(plan.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,10.0)]"),
+      s"scan filter not pushed below the fence:\n$plan")
+  }
+
+  test("formatted plans print no JVM identity hash (q_percentile, q_multimodal)") {
+    // a default toString (Aggregator, Scala lambda) prints `Class@1a2b3c4d`,
+    // which changes from run to run and makes plans/ dumps undiffable
+    Seq("q_percentile", "q_multimodal").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val hashes = "@[0-9a-f]{6,}".r.findAllIn(plan).toSeq
+      assert(hashes.isEmpty, s"$q plan prints identity hashes $hashes:\n$plan")
+    }
+  }
+
   test("small-dimension joins are broadcast, not shuffled") {
     Seq("q_join_inner", "q_join_multi").foreach { q =>
       val plan = executedPlan(RelationalQueries.queries(q)(spark, dir))
