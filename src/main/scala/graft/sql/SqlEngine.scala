@@ -282,10 +282,16 @@ final class SqlEngine(spark: SparkSession) {
     // reference (Aggregate::GroupKey only): aggregate with a discarded
     // placeholder so the plan is still a hash aggregate over the keys.
     val effAggCols = if (aggCols.nonEmpty) aggCols else Seq(count(lit(1)).as("__drop"))
+    // Grouped results are small (the reference holds them all in one
+    // map): everything after the hash aggregate -- HAVING, projection,
+    // DISTINCT, key order, LIMIT -- runs in the one task that reads the
+    // aggregate's shuffle. Coalesce is narrow, so it adds no exchange, and
+    // its single partition already satisfies DISTINCT's distribution. A
+    // global aggregate is one partition anyway.
     val grouped0 =
       if (groupKeys.isEmpty) withKeys.agg(effAggCols.head, effAggCols.tail: _*)
       else withKeys.groupBy(keyAlias.values.toSeq.map(col): _*)
-        .agg(effAggCols.head, effAggCols.tail: _*)
+        .agg(effAggCols.head, effAggCols.tail: _*).coalesce(1)
     val grouped = if (aggCols.nonEmpty) grouped0 else grouped0.drop("__drop")
 
     // post-agg scope: key + agg aliases (interval-ness carries through
@@ -322,12 +328,15 @@ final class SqlEngine(spark: SparkSession) {
       if (stmt.distinct && stmt.having.isDefined) selected.distinct() else selected
 
     // BTreeMap iteration order: sorted by group key (SURVEY §2.5 A14).
-    // Sort by the output columns that correspond to group keys.
+    // Sort by the output columns that correspond to group keys, ascending
+    // with NULLs first as a global orderBy would, but inside the single
+    // post-aggregate partition: no range-partition sampling job and no
+    // range exchange.
     val keyOutputNames = stmt.projections.zipWithIndex.flatMap { case ((alias, e), i) =>
       if (groupKeys.contains(e)) Some(alias.getOrElse(defaultName(e, i))) else None
     }
     val ordered =
-      if (keyOutputNames.nonEmpty) distincted.orderBy(keyOutputNames.map(col): _*)
+      if (keyOutputNames.nonEmpty) distincted.sortWithinPartitions(keyOutputNames.map(col): _*)
       else distincted
     stmt.limit.map(ordered.limit).getOrElse(ordered)
   }

@@ -13,8 +13,9 @@ import graft.functions.{Aggregates, SqlgrepFunctions}
   * NULL to false; integer division truncates; integer AVG truncates;
   * STDDEV/VARIANCE are population; PERCENTILE is exact floor(p*n);
   * aggregate output is sorted by group key (the reference's BTreeMap
-  * iteration order); aggregate-level DISTINCT only fires when HAVING is
-  * present; one aggregate per projection.
+  * iteration order), which [[SqlEngine]] produces inside the one
+  * post-aggregate task; aggregate-level DISTINCT only fires when HAVING
+  * is present; one aggregate per projection.
   */
 final class Translator(base: DataFrame, scope: Map[String, Column],
     types: Map[String, graft.core.ValueType] = Map.empty) {

@@ -11,15 +11,10 @@ import graft.functions.RegexCaptures
 import graft.sql.SqlEngine
 import graft.streaming.FollowStream
 
-/** `SqlEngine` materializes a table's parse from the second query over
-  * the same cached input on. These cases pin that a materialized query
-  * returns exactly what the extraction returns, that it is released when
-  * its input or table changes, and that every other input keeps running
-  * the extraction. */
-class ParsedTableCacheSpec extends SparkSpec {
-  import spark.implicits._
-
-  private val Ddl =
+/** A `sql_logs`-shaped fixture: the log and dimension tables, their
+  * lines and the grouped SELECTs of the benchmark's query mix. */
+object ParsedTableCacheSpec {
+  val Ddl =
     """CREATE TABLE seqlog(
       |    line = 'ingest\\[(\\d+)\\]: sequence (doc-\\d+) from (\\S+) n_tok=(\\d+)',
       |    line[2] => doc TEXT,
@@ -33,36 +28,53 @@ class ParsedTableCacheSpec extends SparkSpec {
       |    line[3] => tier INT
       |);""".stripMargin
 
-  private val sources = Seq("web", "books", "news", "forum", "code")
+  val sources = Seq("web", "books", "news", "forum", "code")
 
   /** Ingest lines that match `seqlog`, interleaved with lines that do not. */
-  private val logLines: Seq[String] = (0 until 3000).map { i =>
+  val logLines: Seq[String] = (0 until 3000).map { i =>
     if (i % 3 == 2) s"2026-01-01 bulk[$i]: batch of ${i % 17} sequences"
     else s"2026-01-01 ingest[$i]: sequence doc-${i * 7 % 1000} from ${sources(i % 5)} n_tok=${i * 37 % 512}"
   }
+
+  val dimLines: Seq[String] = sources.map(s => s"dim $s region r${s.length % 3} tier ${s.length}")
+
+  /** The grouped SELECTs, by their `sql_logs` names. */
+  val Grouped: Map[String, String] = Map(
+    "group_agg" -> ("SELECT src, COUNT() AS n_rows, SUM(n) AS sum_tok, AVG(n) AS avg_tok, " +
+      "MAX(n) * 2 AS max2 FROM seqlog GROUP BY src"),
+    "having" -> "SELECT src, COUNT() AS n_rows FROM seqlog WHERE n < 256 GROUP BY src HAVING COUNT() > 100",
+    "distinct_having" -> ("SELECT DISTINCT COUNT() / 100 AS bucket FROM seqlog GROUP BY src " +
+      "HAVING COUNT() > 10"),
+    "join" -> ("SELECT seqlog.src AS src, srcdim.region AS region, COUNT() AS n_rows, " +
+      "SUM(seqlog.n) AS sum_n FROM seqlog INNER JOIN srcdim ON seqlog.src = srcdim.sname " +
+      "WHERE srcdim.tier >= 4 GROUP BY seqlog.src, srcdim.region"))
+}
+
+/** `SqlEngine` materializes a table's parse from the second query over
+  * the same cached input on. These cases pin that a materialized query
+  * returns exactly what the extraction returns, that it is released when
+  * its input or table changes, and that every other input keeps running
+  * the extraction. */
+class ParsedTableCacheSpec extends SparkSpec {
+  import ParsedTableCacheSpec._
+  import spark.implicits._
 
   /** The log as a fresh, uncached DataFrame of three ordered partitions. */
   private def logDf(): DataFrame = spark.sparkContext.parallelize(logLines, 3).toDF("value")
 
   /** The dimension log, uncached (an RDD, so the optimizer cannot fold
     * its extraction away as it would over a local relation). */
-  private def dim: DataFrame = spark.sparkContext
-    .parallelize(sources.map(s => s"dim $s region r${s.length % 3} tier ${s.length}"), 1)
-    .toDF("value")
+  private def dim: DataFrame = spark.sparkContext.parallelize(dimLines, 1).toDF("value")
 
   /** (query, whether its row order is defined) */
   private val queries: Seq[(String, Boolean)] = Seq(
     "SELECT doc, src, n FROM seqlog WHERE n >= 300 AND src != 'web'" -> true,
-    ("SELECT src, COUNT() AS n_rows, SUM(n) AS sum_tok, AVG(n) AS avg_tok, MAX(n) * 2 AS max2 " +
-      "FROM seqlog GROUP BY src") -> true,
-    "SELECT src, COUNT() AS n_rows FROM seqlog WHERE n < 256 GROUP BY src HAVING COUNT() > 100" -> true,
+    Grouped("group_agg") -> true,
+    Grouped("having") -> true,
     // no group key is projected, so nothing orders the distinct buckets
-    ("SELECT DISTINCT COUNT() / 100 AS bucket FROM seqlog GROUP BY src " +
-      "HAVING COUNT() > 10") -> false,
+    Grouped("distinct_having") -> false,
     "SELECT doc, n FROM seqlog WHERE src = 'books' LIMIT 20" -> true,
-    ("SELECT seqlog.src AS src, srcdim.region AS region, COUNT() AS n_rows, " +
-      "SUM(seqlog.n) AS sum_n FROM seqlog INNER JOIN srcdim ON seqlog.src = srcdim.sname " +
-      "WHERE srcdim.tier >= 4 GROUP BY seqlog.src, srcdim.region") -> true,
+    Grouped("join") -> true,
     "SELECT * FROM seqlog" -> true)
 
   private def engine(): SqlEngine = { val e = new SqlEngine(spark); e.addTables(Ddl); e }
@@ -197,8 +209,7 @@ class ParsedTableCacheSpec extends SparkSpec {
     }
     assert(persisted === before)
 
-    val dir = Files.createTempDirectory("parsed-follow")
-    try {
+    withTempDir("parsed-follow") { dir =>
       Files.write(dir.resolve("a.log"), logLines.take(30).asJava, StandardCharsets.UTF_8)
       val stream = FollowStream.lines(spark, dir.toString)
       (1 to 3).foreach { _ =>
@@ -206,9 +217,6 @@ class ParsedTableCacheSpec extends SparkSpec {
         assert(df.isStreaming && extractions(df) === 1)
       }
       assert(persisted === before)
-    } finally {
-      Files.list(dir).iterator().asScala.foreach(Files.delete)
-      Files.delete(dir)
     }
   }
 }

@@ -208,46 +208,52 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("snapshot write + commit + time-travel read") {
-    val root = Files.createTempDirectory("mtbl").toString
-    val manifest = PipelineJob.run(spark, seqs, root, snapshotId = 1L, partitions = 8)
-    assert(manifest.sinks.map(_.sink).sorted === Seq("audit", "bulk", "ingest"))
-    assert(manifest.sinks.map(_.rows).sum === N)
-    val table = new ManifestTable(root)
-    assert(table.currentSnapshotId === Some(1L))
-    val ingest = table.read(spark, "ingest")
-    assert(ingest.count() === manifest.sinks.find(_.sink == "ingest").get.rows)
-    val m = PipelineJob.metrics(root, 1L)
-    assert(m.exists(_.rowsRouted === N))
-    assert(m.exists(_.rowsIn === N))
+    withTempDir("mtbl") { dir =>
+      val root = dir.toString
+      val manifest = PipelineJob.run(spark, seqs, root, snapshotId = 1L, partitions = 8)
+      assert(manifest.sinks.map(_.sink).sorted === Seq("audit", "bulk", "ingest"))
+      assert(manifest.sinks.map(_.rows).sum === N)
+      val table = new ManifestTable(root)
+      assert(table.currentSnapshotId === Some(1L))
+      val ingest = table.read(spark, "ingest")
+      assert(ingest.count() === manifest.sinks.find(_.sink == "ingest").get.rows)
+      val m = PipelineJob.metrics(root, 1L)
+      assert(m.exists(_.rowsRouted === N))
+      assert(m.exists(_.rowsIn === N))
+    }
   }
 
   test("resume: committed snapshot short-circuits; lost pointer recommits from fragments") {
-    val root = Files.createTempDirectory("mtbl2").toString
-    val m1 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
-    // no-op resume returns identical manifest
-    val m2 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
-    assert(m1 === m2)
-    // simulate crash after fragments, before commit: delete manifest+pointer
-    Files.delete(Paths.get(root, "_manifests", "7.json"))
-    Files.delete(Paths.get(root, "_current"))
-    val t0 = System.nanoTime()
-    val m3 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
-    val resumeSec = (System.nanoTime() - t0) / 1e9
-    assert(m3.sinks.toSet === m1.sinks.toSet)
-    // fragments short-circuit: resume must not recompute the pipeline
-    assert(resumeSec < 5.0, s"resume took ${resumeSec}s — recomputed instead of resuming?")
+    withTempDir("mtbl2") { dir =>
+      val root = dir.toString
+      val m1 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
+      // no-op resume returns identical manifest
+      val m2 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
+      assert(m1 === m2)
+      // simulate crash after fragments, before commit: delete manifest+pointer
+      Files.delete(Paths.get(root, "_manifests", "7.json"))
+      Files.delete(Paths.get(root, "_current"))
+      val t0 = System.nanoTime()
+      val m3 = PipelineJob.run(spark, seqs, root, snapshotId = 7L, partitions = 8)
+      val resumeSec = (System.nanoTime() - t0) / 1e9
+      assert(m3.sinks.toSet === m1.sinks.toSet)
+      // fragments short-circuit: resume must not recompute the pipeline
+      assert(resumeSec < 5.0, s"resume took ${resumeSec}s — recomputed instead of resuming?")
+    }
   }
 
   test("second snapshot records parent lineage (time travel)") {
-    val root = Files.createTempDirectory("mtbl3").toString
-    PipelineJob.run(spark, seqs, root, snapshotId = 1L, partitions = 8)
-    val m2 = PipelineJob.run(spark,
-      TokenSequences.synthetic(spark, 100L, partitions = 2), root,
-      snapshotId = 2L, partitions = 2)
-    assert(m2.parentId === Some(1L))
-    val table = new ManifestTable(root)
-    // time-travel: snapshot 1 still reads the old row counts
-    val oldRows = table.manifest(1L).sinks.map(_.rows).sum
-    assert(oldRows === N)
+    withTempDir("mtbl3") { dir =>
+      val root = dir.toString
+      PipelineJob.run(spark, seqs, root, snapshotId = 1L, partitions = 8)
+      val m2 = PipelineJob.run(spark,
+        TokenSequences.synthetic(spark, 100L, partitions = 2), root,
+        snapshotId = 2L, partitions = 2)
+      assert(m2.parentId === Some(1L))
+      val table = new ManifestTable(root)
+      // time-travel: snapshot 1 still reads the old row counts
+      val oldRows = table.manifest(1L).sinks.map(_.rows).sum
+      assert(oldRows === N)
+    }
   }
 }

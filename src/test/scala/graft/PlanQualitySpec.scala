@@ -266,4 +266,72 @@ class PlanQualitySpec extends SparkSpec {
     assert(plan.contains("pmod(hash(doc_id"),
       s"no salt in partitioning:\n$plan")
   }
+
+  /** Jobs started by `f`, counted by a listener on `f`'s thread-local tag;
+    * a marker job's end event follows every event posted before it. */
+  private def jobsStarted(f: => Unit): Int = {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val counted = new AtomicInteger
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("counted") => counted.incrementAndGet()
+          case Some("marker") => markerJobs.add(e.jobId)
+          case _ => ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) drained.countDown()
+    }
+    def tagged(tag: String)(g: => Unit): Unit = {
+      sc.setLocalProperty(key, tag)
+      try g finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged("counted")(f)
+      tagged("marker")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("grouped SELECTs order their keys in the post-aggregate task, not by a range sort") {
+    // sqlgrep's key order comes from a local sort after coalesce(1): one
+    // hash exchange for the aggregate, no range-partition sampling job
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import ParsedTableCacheSpec.{Ddl, Grouped, dimLines, logLines}
+    import spark.implicits._
+    val helper = new AdaptiveSparkPlanHelper {}
+    val lines = spark.sparkContext.parallelize(logLines, 3).toDF("value").cache()
+    val dim = spark.sparkContext.parallelize(dimLines, 1).toDF("value")
+    val engine = new graft.sql.SqlEngine(spark)
+    engine.addTables(Ddl)
+    // jobs a query over the materialized parse runs, measured: the
+    // aggregate's map stage and the result, plus the dimension's
+    // broadcast for the join
+    val maxJobs = Map("group_agg" -> 2, "having" -> 2, "distinct_having" -> 2, "join" -> 3)
+    try Seq("group_agg", "having", "distinct_having", "join").foreach { name =>
+      def run() = engine.query(Grouped(name), lines, if (name == "join") Some(dim) else None)
+      run().collect(); run().collect() // the second query materializes the parse
+      val df = run()
+      val jobs = jobsStarted(df.collect())
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+      val broadcasts = helper.collect(plan) { case e: BroadcastExchangeExec => e }
+      assert(!plan.toString.toLowerCase.contains("rangepartitioning"), s"$name range-sorts:\n$plan")
+      assert(shuffles.size === 1, s"$name:\n$plan")
+      assert(broadcasts.size === (if (name == "join") 1 else 0), s"$name:\n$plan")
+      assert(jobs <= maxJobs(name), s"$name ran $jobs jobs:\n$plan")
+    } finally lines.unpersist(blocking = true)
+  }
 }

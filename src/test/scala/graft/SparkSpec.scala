@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,5 +27,16 @@ trait SparkSpec extends AnyFunSuite {
     val key = "spark.sql.optimizer.excludedRules"
     spark.conf.set(key, "graft.functions.FusePackedTokenGen")
     try f finally spark.conf.unset(key)
+  }
+
+  /** Evaluates `f` on a new `java.io.tmpdir` directory named `prefix*`,
+    * then deletes the directory with everything written into it. */
+  def withTempDir[T](prefix: String)(f: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir) finally {
+      val walk = Files.walk(dir)
+      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
   }
 }
