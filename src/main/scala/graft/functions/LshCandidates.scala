@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 
 /** A broadcast LSH index of the (small) QUERY side of an ANN search:
   * per-table signature → query-index buckets, plus the L2-normalized
-  * query embeddings. Built once on the driver (query metadata, like the
-  * IVF centroid matrix — NOT corpus data) and shipped to executors as a
+  * query embeddings. Built once on the driver (query metadata, NOT
+  * corpus data) and shipped to executors as a
   * plan reference object. */
 final class LshQueryIndex(
     val qnorm: Array[Array[Double]],

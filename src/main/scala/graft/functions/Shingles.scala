@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word n-gram shingles of `lower(text)` — the candidate-
-  * generation primitive for MinHash/LSH and n-gram Jaccard dedup.
+  * generation primitive for n-gram Jaccard dedup.
   *
   * Replaces the HOF formulation
   * `array_distinct(filter(transform(sequence(...), i -> array_join(

@@ -89,9 +89,4 @@ object SqlgrepFunctions {
       case "second" => second(ts).cast(LongType)
       case p => throw new IllegalArgumentException(s"unknown extract part: $p")
     }
-
-  /** `date_trunc(part, ts)` (reference
-    * `src/execution/expression_execution.rs:459-512`; Spark's built-in
-    * has identical arg order and part names). */
-  def dateTrunc(part: String, ts: Column): Column = date_trunc(part, ts)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -124,87 +124,6 @@ object CosineSim {
     }
     if (na == 0.0 || nb == 0.0) return null
     java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-  }
-}
-
-/** The `nprobe` nearest centroids of an embedding, by cosine, as an
-  * `array<int>` of centroid indexes (most-similar first) — the IVF
-  * assignment step. The centroid matrix rides along as a plan reference
-  * object (broadcast with the serialized plan, shared per executor), and
-  * is L2-normalized once so the per-row work is `nlist` pure dot
-  * products + a tiny partial selection: ranking by dot against
-  * normalized centroids equals ranking by cosine, because the row's own
-  * norm is constant across candidates. NULL elements contribute 0. */
-case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
-    nprobe: Int) extends UnaryExpression {
-  require(centroids.nonEmpty, "centroids must be non-empty")
-  require(nprobe >= 1 && nprobe <= centroids.length,
-    s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "nearest_centroids"
-
-  private lazy val isF = VectorOps.isFloatArray(child)
-  @transient private lazy val normed = NearestCentroids.normalize(centroids)
-
-  override def nullSafeEval(a: Any): Any =
-    NearestCentroids.compute(a.asInstanceOf[ArrayData], isF, normed, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mat = ctx.addReferenceObj("centroids", normed, "double[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.functions.NearestCentroids.compute($a, $isF, $mat, $nprobe)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NearestCentroids {
-  import org.apache.spark.sql.graftbridge.Bridge
-
-  def apply(emb: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
-    Bridge.column(NearestCentroids(Bridge.expression(emb), centroids, nprobe))
-
-  private[functions] def normalize(c: Array[Array[Double]]): Array[Array[Double]] =
-    c.map { row =>
-      var s = 0.0; var i = 0
-      while (i < row.length) { s += row(i) * row(i); i += 1 }
-      val n = math.sqrt(s)
-      if (n == 0.0) row.clone() else row.map(_ / n)
-    }
-
-  def compute(a: ArrayData, aF: Boolean, cents: Array[Array[Double]],
-      nprobe: Int): ArrayData = {
-    val k = cents.length
-    val dots = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val row = cents(c)
-      val n = math.min(a.numElements(), row.length)
-      var d = 0.0; var i = 0
-      while (i < n) {
-        if (!a.isNullAt(i)) {
-          val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-          d += x * row(i)
-        }
-        i += 1
-      }
-      dots(c) = d; c += 1
-    }
-    // partial selection: nprobe << nlist, ties broken by lower index
-    val out = new Array[Int](nprobe)
-    val taken = new Array[Boolean](k)
-    var j = 0
-    while (j < nprobe) {
-      var best = -1; var bestD = Double.NegativeInfinity
-      var i = 0
-      while (i < k) {
-        if (!taken(i) && dots(i) > bestD) { best = i; bestD = dots(i) }
-        i += 1
-      }
-      taken(best) = true; out(j) = best; j += 1
-    }
-    ArrayData.toArrayData(out)
   }
 }
 

@@ -4,11 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.SimHash64
-
 /** Deduplication operators for large-scale training-data pipelines.
   * All formulations are shuffle-conscious: candidate generation is
-  * always *blocked* (band buckets / signature chunks / key groups) so no
+  * always *blocked* (shingle posting lists / key groups) so no
   * stage ever materializes the O(n²) pair space — the only joins are
   * equi-joins on bucket keys, which Spark executes as hash shuffles on
   * the bucket id.
@@ -53,14 +51,11 @@ object Dedup {
       .select(cols.map(c => col("__row").getField(c).as(c)): _*)
   }
 
-  /** Exact-duplicate *groups*: digest -> count, for audit/reporting. */
-  def exactGroups(df: DataFrame, on: Column): DataFrame =
-    df.groupBy(md5(on.cast(StringType)).as("digest"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-
   /** Drop rows in over-sized candidate buckets (count window over the
-    * bucket key, partitioning reused by the downstream bucket join). */
+    * bucket key, partitioning reused by the downstream bucket join). One
+    * degenerate bucket (boilerplate text, one dominant label) would
+    * re-quadratize its block at corpus scale, so it is dropped wholesale:
+    * near-exact duplicates that frequent belong to exact dedup anyway. */
   private def capBuckets(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*)
@@ -78,92 +73,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     graft.functions.Shingles(text, n)
 
-  // ---------------------------------------------------------------- minhash
-
-  /** MinHash signature: `numHashes` seeded murmur3 minima over the
-    * shingle set — one codegen'd scan that hashes each shingle's bytes
-    * once ([[graft.functions.MinHashSignature]]; bit-identical to the
-    * `array_min(transform(sh, s => hash(s, seed)))`-per-seed HOF
-    * formulation it replaces, which was interpreted CodegenFallback —
-    * Spark higher-order functions do not codegen). */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    graft.functions.MinHashSignature(shingleCol, numHashes)
-
-  /** LSH band keys: signature split into `bands` bands of
-    * `numHashes/bands` rows; two docs land in the same bucket for a band
-    * iff that band of the signature matches exactly. */
-  def bandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    array((0 until bands).map(b =>
-      struct(lit(b).as("band"), hash(slice(sig, b * r + 1, r)).as("key"))): _*)
-  }
-
-  /** MinHash+LSH near-duplicate candidate pairs with exact-Jaccard
-    * verification. Returns (id_a, id_b, jaccard) with id_a < id_b and
-    * jaccard >= threshold.
-    *
-    * Scale shape: explode to (band, key, id) — |docs| × bands rows —
-    * then a self-equi-join on (band, key); candidates are deduped
-    * *before* the (expensive) exact-Jaccard verify, which re-joins the
-    * shingle sets only for candidate ids.
-    */
-  def minhashLsh(df: DataFrame, id: Column, text: Column,
-      shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    val sh = df.select(id.as("id"), shingles(text, shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val sig = sh.withColumn("sig", minhashSignature(col("sh"), numHashes))
-    val rawBuckets = sig.select(col("id"),
-        explode(bandKeys(col("sig"), numHashes, bands)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    // Bucket-size cap: one degenerate bucket (empty/boilerplate text
-    // hashing identically) re-quadratizes a block at corpus scale; such
-    // buckets are dropped wholesale (standard boilerplate-suppression —
-    // near-exact duplicates that frequent belong to exact dedup anyway).
-    // The count window shuffles on (band, key) — the same partitioning
-    // the candidate self-join needs, so the exchange is reused.
-    val buckets = capBuckets(rawBuckets, Seq("band", "key"), maxBucket)
-    val l = buckets.as("l"); val r = buckets.as("r")
-    val candidates = l.join(r,
-        col("l.band") === col("r.band") && col("l.key") === col("r.key")
-          && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    candidates.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  // ---------------------------------------------------------------- simhash
-
-  /** SimHash near-duplicate pairs: 64-bit signature ([[SimHash64]]),
-    * blocked by the 4 16-bit chunks (pigeonhole: hamming <= 3 implies at
-    * least one identical chunk), verified by exact Hamming distance. */
-  def simhashPairs(df: DataFrame, id: Column, text: Column,
-      maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val sigs = df.select(id.as("id"),
-      SimHash64(split(lower(text), "\\s+")).as("sig"))
-    val rawChunks = sigs.select(col("id"), col("sig"),
-        explode(array((0 until 4).map(c =>
-          struct(lit(c).as("c"),
-            shiftright(col("sig"), c * 16).bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("ck"))
-      .select(col("id"), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
-    // same degenerate-bucket cap as minhashLsh (see comment there)
-    val chunks = capBuckets(rawChunks, Seq("c", "v"), maxBucket)
-    val l = chunks.as("l"); val r = chunks.as("r")
-    l.join(r, col("l.c") === col("r.c") && col("l.v") === col("r.v")
-        && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        SimHash64.hamming(col("l.sig"), col("r.sig")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   // ---------------------------------------------------- n-gram Jaccard
 
   /** Exact n-gram Jaccard similarity within a blocking key (e.g. same
@@ -179,11 +88,10 @@ object Dedup {
     * that hash-shuffles on (blk, shingle); pairs with an empty
     * intersection (the overwhelming majority) are never formed, and the
     * per-pair work is a counting aggregate, not array ops. A
-    * high-frequency shingle re-quadratizes its posting list — the same
-    * degenerate-bucket risk as minhashLsh — so posting lists are capped
-    * at `maxPosting` (docs carrying a capped shingle still pair through
-    * their other shingles; Infinity disables the cap for exact
-    * semantics, which the oracle gate uses at small scale).
+    * high-frequency shingle re-quadratizes its posting list, so posting
+    * lists are capped at `maxPosting` (docs carrying a capped shingle
+    * still pair through their other shingles; `Int.MaxValue` disables the
+    * cap for exact semantics, which the oracle gate uses at small scale).
     *
     * Requires threshold > 0 (a zero threshold would have to emit
     * non-overlapping pairs, which an inverted index never sees). */
@@ -211,18 +119,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Greedy near-duplicate removal over a candidate-pair list (the
-    * (id_a, id_b) output of [[minhashLsh]] / [[simhashPairs]] /
-    * [[ngramJaccard]] / [[embeddingNearDup]], all of which emit
-    * id_a < id_b): drop every row appearing as the RIGHT side of any
-    * pair. Keeps the lowest id of a duplicate chain; standard greedy
-    * survivor selection — one anti-join, no connected-components pass
-    * (transitive chains may drop more than the minimal vertex cover,
-    * which is the usual corpus-dedup tradeoff). */
-  def dropNearDuplicates(df: DataFrame, id: Column, pairs: DataFrame): DataFrame =
-    df.join(pairs.select(col("id_b").as("__drop_id")).distinct(),
-      id === col("__drop_id"), "left_anti")
-
   // ------------------------------------------- embedding cosine near-dup
 
   /** Cosine similarity of two float-array columns in double precision —
@@ -237,7 +133,7 @@ object Dedup {
     * linear-ish at 100 TB — global all-pairs cosine is never formed, and
     * `maxBucket` drops degenerate blocks (one dominant label would
     * otherwise re-quadratize its block, the same failure mode
-    * [[minhashLsh]]/[[simhashPairs]] cap). Rows in over-cap blocks are
+    * [[ngramJaccard]]'s `maxPosting` caps). Rows in over-cap blocks are
     * excluded from pairing — route dominant labels through
     * [[Similarity.lshTopK]] instead, which stays k-bounded per row. */
   def embeddingNearDup(df: DataFrame, id: Column, emb: Column, block: Column,

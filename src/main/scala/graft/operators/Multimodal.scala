@@ -18,19 +18,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** media row: payload + typed metadata (the Iceberg-friendly shape —
-    * metadata columns prune/push down; the blob column is only read by
-    * stages that need bytes). */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true))), nullable = true)))
-
   final case class MediaFeatures(
       media_id: Long, kind: String, n_bytes: Int, histogram: Array[Long])
 

@@ -7,16 +7,13 @@ import org.apache.spark.sql.types._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
-  * Three paths:
+  * Two paths:
   *  - [[bruteForceTopK]] — the exact baseline: broadcast the (small)
   *    query set against the corpus; one scan, no corpus shuffle.
-  *  - [[lshTopK]] — a scale path: random-hyperplane LSH buckets both
+  *  - [[lshTopK]] — the scale path: random-hyperplane LSH buckets both
   *    sides; candidates are only within-bucket (multi-probe via several
   *    independent tables), then exact cosine re-rank.
-  *  - [[ivfTopK]] — the other scale path: data-adaptive inverted-file
-  *    buckets (deterministically trained centroids), query probes its
-  *    `nprobe` nearest lists, exact cosine re-rank.
-  *  Recall of both approximate paths is tested against the brute-force
+  *  Recall of the approximate path is tested against the brute-force
   *  baseline in DedupSpec.
   */
 object Similarity {
@@ -53,88 +50,6 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  // -------------------------------------------------------------- IVF
-
-  /** Deterministic IVF centroid training. Seeds are the `nlist` corpus
-    * vectors with the smallest `md5(id)` (a deterministic pseudo-random
-    * sample — no RNG, stable across runs/cluster sizes), optionally
-    * refined by `lloydIters` distributed Lloyd steps: assign every
-    * vector to its nearest centroid (codegen'd
-    * [[graft.functions.NearestCentroids]]), recompute per-cluster
-    * element-wise means via posexplode + groupBy (two shuffles of
-    * rows × dims scalar values — fine for small dims; empty clusters
-    * keep their previous centroid). Only `nlist × dims` doubles ever
-    * reach the driver — centroid training collects METADATA, not data. */
-  def trainCentroids(corpus: DataFrame, id: Column, emb: Column,
-      nlist: Int, lloydIters: Int = 1,
-      trainFraction: Double = 1.0): Array[Array[Double]] = {
-    require(trainFraction > 0.0 && trainFraction <= 1.0,
-      s"trainFraction must be in (0,1], got $trainFraction")
-    val asDouble = emb.cast(ArrayType(DoubleType))
-    // Lloyd refinement trains on a deterministic hash-sample of the
-    // corpus when trainFraction < 1: k-means quality converges with
-    // sample size long before corpus size (classic coreset argument),
-    // so at 100 TB the refinement pass reads a fixed-size slice instead
-    // of shuffling rows x dims scalars for the whole table. The hash
-    // sample is stable across runs and cluster sizes (no RNG).
-    val trainSet =
-      if (trainFraction >= 1.0) corpus
-      else corpus.filter(
-        pmod(hash(id), lit(1000000)) < (trainFraction * 1000000).toInt)
-    var cents: Array[Array[Double]] = corpus
-      .select(asDouble.as("e"), id.as("i"))
-      .orderBy(md5(col("i").cast(StringType)), col("i"))
-      .limit(nlist)
-      .collect().map(_.getSeq[Double](0).toArray)
-    var it = 0
-    while (it < lloydIters) {
-      val assigned = trainSet.select(asDouble.as("e"))
-        .withColumn("cl",
-          element_at(graft.functions.NearestCentroids(col("e"), cents, 1), 1))
-      val means = assigned
-        .select(col("cl"), posexplode(col("e")).as(Seq("pos", "v")))
-        .groupBy("cl", "pos").agg(avg("v").as("m"))
-        .collect()
-      val next = cents.map(_.clone())
-      means.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-      }
-      cents = next
-      it += 1
-    }
-    cents
-  }
-
-  /** IVF-bucketed ANN (the classic inverted-file index: Sivic &
-    * Zisserman "Video Google" 2003; Jégou et al. "Product Quantization
-    * for Nearest Neighbor Search" 2011, §IVF; popularized by FAISS):
-    * each corpus vector is assigned to its single nearest centroid; a
-    * query probes its `nprobe` nearest centroid lists. Candidates are
-    * only within probed lists — the corpus is never cross-joined — then
-    * exact cosine re-rank to top-k. Versus [[lshTopK]]: data-adaptive
-    * buckets (trained on the corpus distribution) at the cost of a
-    * training pass; both are linear-scan-free at 100 TB. The probed
-    * query side is broadcast; the corpus side shuffles ONCE on the
-    * centroid id (or not at all — the join key is a derived column, so
-    * with a broadcast right side the corpus is scanned in place). */
-  def ivfTopK(corpus: DataFrame, corpusId: Column, corpusEmb: Column,
-      queries: DataFrame, queryId: Column, queryEmb: Column,
-      k: Int, nlist: Int = 64, nprobe: Int = 8, lloydIters: Int = 1,
-      trainFraction: Double = 1.0): DataFrame = {
-    val cents = trainCentroids(corpus, corpusId, corpusEmb, nlist, lloydIters,
-      trainFraction)
-    import graft.functions.NearestCentroids
-    val c = corpus.select(corpusId.as("nn_id"), corpusEmb.as("c_emb"),
-      element_at(NearestCentroids(corpusEmb, cents, 1), 1).as("cl"))
-    val q = queries.select(queryId.as("query_id"), queryEmb.as("q_emb"),
-      explode(NearestCentroids(queryEmb, cents, nprobe)).as("cl"))
-    val candidates = c.join(broadcast(q), "cl")
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("cos", Dedup.cosine(col("c_emb"), col("q_emb")))
-      .select(col("query_id"), col("nn_id"), col("cos"))
-    rankTopK(candidates, k)
-  }
-
   /** LSH-bucketed ANN: `tables` independent hash tables of `planes`
     * hyperplanes each; a corpus row is a candidate for a query iff they
     * share a bucket in at least one table. Candidates deduped, then
@@ -142,7 +57,7 @@ object Similarity {
     *
     * Scale shape — MAP-SIDE PROBE. The query side is small by contract
     * (it is collected into an [[graft.functions.LshQueryIndex]] — query
-    * metadata, like the IVF centroid matrix, not corpus data), and the
+    * metadata, not corpus data), and the
     * corpus is scanned exactly once by one codegen'd expression that
     * signs the row for every table, probes the index, dedupes matches
     * in-expression, and emits only ACTUAL candidates with the cosine

@@ -97,13 +97,4 @@ object TextAnalysis {
     * per comparison. */
   def bagOfWordsFingerprint(text: Column): Column =
     md5(array_join(sort_array(array_distinct(split(lower(text), "\\s+"))), " "))
-
-  /** Polynomial rolling hash (Rabin-Karp style) over words — order
-    * sensitive, for exact-ish content identity. 31-base mod 2^31 in
-    * integer arithmetic (cross-engine safe). One codegen'd byte scan
-    * ([[graft.functions.RollingHash]]); the `aggregate(split(...))` HOF
-    * it replaces — bit-identically — was the last interpreted lambda in
-    * the text-analysis surface. */
-  def rollingHashFingerprint(text: Column): Column =
-    graft.functions.RollingHash(text)
 }

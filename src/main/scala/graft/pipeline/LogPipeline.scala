@@ -144,25 +144,13 @@ object LogPipeline {
     * partitions x ln(partitions) — a fixed salt of 16 gave 48 keys over
     * 128 partitions, so birthday-collision stacking made ~4x straggler
     * reduce partitions (measured as the 16-core run's partial-width
-    * tail, BASELINE.md round 4). Default 2x partitions keeps the
-    * straggler bound ~1.2x at every scale; rows of one sink still land
+    * tail, BASELINE.md round 4). `salts = max(16, 2 x partitions)` keeps
+    * the straggler bound ~1.2x at every scale; rows of one sink still land
     * on a bounded partition subset. */
-  def salted(routed: DataFrame, partitions: Int, salts: Int = -1): DataFrame = {
-    val s = if (salts > 0) salts else math.max(16, 2 * partitions)
-    routed.repartition(partitions, col("sink"), pmod(hash(col("doc_id")), lit(s)))
+  def salted(routed: DataFrame, partitions: Int): DataFrame = {
+    val salts = math.max(16, 2 * partitions)
+    routed.repartition(partitions, col("sink"), pmod(hash(col("doc_id")), lit(salts)))
   }
-
-  // ------------------------------------------------------------- aggregate
-
-  /** Per-sink aggregates (the reference's GROUP BY surface: count, sum,
-    * avg with integer truncation, count distinct). */
-  def sinkAggregates(routed: DataFrame): DataFrame =
-    routed.groupBy(col("sink"), col("region"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("n_tok")).as("sum_tok"),
-        (sum(col("n_tok")) / count(lit(1))).cast(LongType).as("avg_tok"),
-        countDistinct(col("source")).as("nd_src"))
 
   // ------------------------------------------------------------ end-to-end
 

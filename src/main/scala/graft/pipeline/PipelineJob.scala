@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,17 +25,17 @@ object PipelineJob {
 
   final case class RunMetrics(rowsIn: Long, rowsRouted: Long, tokensRouted: Long)
 
+  /** Marker written once the snapshot's data files are complete; it
+    * carries the run's observed counts. */
+  private val DataDone = "_data_done"
+
   def run(spark: SparkSession, seqs: DataFrame, tableRoot: String,
       snapshotId: Long, partitions: Int): Manifest = {
     val table = new ManifestTable(tableRoot)
     // already committed? -> resume is a no-op
-    if (Files.exists(Paths.get(tableRoot, "_manifests", s"$snapshotId.json")))
-      return table.manifest(snapshotId)
+    if (table.isCommitted(snapshotId)) return table.manifest(snapshotId)
 
-    val dataDir = Paths.get(tableRoot, "data", s"snap=$snapshotId")
-    val doneMarker = Paths.get(tableRoot, "_pending", s"$snapshotId", "_data_done")
-
-    if (!Files.exists(doneMarker)) {
+    if (table.marker(snapshotId, DataDone).isEmpty) {
       val obsIn = Observation(s"pipeline-in-$snapshotId")
       val seqsObs = seqs.observe(obsIn, count(lit(1)).as("rows_in"))
       // packTransport stated explicitly (round-5 advice): the snapshot
@@ -55,50 +52,27 @@ object PipelineJob {
         sum(col("n_tok")).as("tokens_routed"))
       observed.write.mode("overwrite")
         .partitionBy("sink")
-        .parquet(dataDir.toString)
+        .parquet(table.dataDir(snapshotId).toString)
       val m = obs.get
       val mIn = obsIn.get
-      writeAtomic(doneMarker,
+      table.writeMarker(snapshotId, DataDone,
         s"""{"rows_in":${mIn("rows_in")},"rows_routed":${m("rows_routed")},""" +
           s""""tokens_routed":${m("tokens_routed")}}""")
     }
 
     // per-sink lineage fragments (idempotent; parquet-footer counts only)
-    val sinkDirs = Files.list(dataDir).iterator()
-    val sinks = scala.collection.mutable.ListBuffer[String]()
-    while (sinkDirs.hasNext) {
-      val d = sinkDirs.next()
-      val name = d.getFileName.toString
-      if (name.startsWith("sink=")) sinks += name.stripPrefix("sink=")
-    }
-    sinks.sorted.foreach { sink =>
-      val fragPath = Paths.get(tableRoot, "_pending", s"$snapshotId", s"$sink.json")
-      if (!Files.exists(fragPath)) {
-        val path = s"$dataDir/sink=$sink"
-        val rows = spark.read.parquet(path).count()
-        writeAtomic(fragPath,
-          Manifest(snapshotId, None, Seq(SinkLineage(sink, rows, path))).toJson)
-      }
+    val done = table.completedSinks(snapshotId)
+    table.dataSinks(snapshotId).foreach { case (sink, path) =>
+      if (!done.contains(sink))
+        table.addFragment(snapshotId, SinkLineage(sink, spark.read.parquet(path).count(), path))
     }
     table.commit(snapshotId)
   }
 
-  def metrics(tableRoot: String, snapshotId: Long): Option[RunMetrics] = {
-    val marker = Paths.get(tableRoot, "_pending", s"$snapshotId", "_data_done")
-    if (!Files.exists(marker)) None
-    else {
-      val s = new String(Files.readAllBytes(marker), StandardCharsets.UTF_8)
+  def metrics(tableRoot: String, snapshotId: Long): Option[RunMetrics] =
+    new ManifestTable(tableRoot).marker(snapshotId, DataDone).flatMap { s =>
       def f(n: String) = ("\"" + n + "\":(\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
       for (r <- f("rows_routed"); t <- f("tokens_routed"))
         yield RunMetrics(f("rows_in").getOrElse(r), r, t)
     }
-  }
-
-  private def writeAtomic(path: java.nio.file.Path, content: String): Unit = {
-    Files.createDirectories(path.getParent)
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 }

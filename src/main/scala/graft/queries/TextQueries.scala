@@ -8,9 +8,9 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators (dedup / similarity / text analysis /
   * multimodal) over the documents + embeddings tables. Everything
-  * cross-engine deterministic carries a DuckDB oracle; MinHash/SimHash/
-  * LSH (engine-specific hash functions) are covered by DedupSpec /
-  * SimilaritySpec instead (planted duplicates, recall vs brute force).
+  * cross-engine deterministic carries a DuckDB oracle; LSH ANN
+  * (engine-specific hash functions) is covered by DedupSpec instead
+  * (recall vs brute force).
   */
 object TextQueries {
   type Q = (SparkSession, String) => DataFrame

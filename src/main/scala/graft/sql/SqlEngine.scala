@@ -31,7 +31,8 @@ final case class RunStats(seconds: Double, linesProcessed: Long,
   * does not read `input` scans the table's extracted columns, kept with
   * `Dataset.cache()`, instead of re-running the regex extraction. The
   * first query, uncached or streaming input, `::'file'` sources, the
-  * join side and [[queryWithStats]] run the extraction as before.
+  * join side and the stats path ([[queryWithStats]],
+  * [[executeWithStats]]) run the extraction as before.
   */
 final class SqlEngine(spark: SparkSession) {
   private val tables = mutable.LinkedHashMap[String, TableDef]()
@@ -75,19 +76,14 @@ final class SqlEngine(spark: SparkSession) {
     * registered so far; the last SELECT's DataFrame is returned (None for
     * pure DDL). */
   def execute(input: String, lines: DataFrame,
-      joinLines: Option[DataFrame] = None): Option[DataFrame] = {
-    def flatten(s: Statement): Seq[Statement] = s match {
-      case Statement.Multiple(ss) => ss.flatMap(flatten)
-      case other => Seq(other)
-    }
-    var last: Option[DataFrame] = None
-    flatten(Parser.parse(input)).foreach {
-      case Statement.CreateTable(td) => define(td)
-      case Statement.Select(sel) => last = Some(runSelect(sel, lines, joinLines))
-      case Statement.Multiple(_) => () // unreachable after flatten
-    }
-    last
-  }
+      joinLines: Option[DataFrame] = None): Option[DataFrame] =
+    statements(input, lines, joinLines)(runSelect(_, lines, joinLines))
+
+  /** [[execute]] with the last SELECT observed as by [[queryWithStats]]
+    * (None for pure DDL). */
+  def executeWithStats(input: String, lines: DataFrame,
+      joinLines: Option[DataFrame] = None): Option[(DataFrame, () => RunStats)] =
+    statements(input, lines, joinLines)(observed(_, lines, joinLines))
 
   /** Like [[query]] but with the reference's `--show-run-stats` surface
     * (`src/executor.rs:12-36`, printed at `src/main.rs:210-216`): input
@@ -96,8 +92,31 @@ final class SqlEngine(spark: SparkSession) {
     * on the returned DataFrame first; the thunk then yields the stats
     * (it blocks until the action completes). */
   def queryWithStats(sql: String, lines: DataFrame,
-      joinLines: Option[DataFrame] = None): (DataFrame, () => RunStats) = {
-    val stmt = Parser.parseQuery(sql)
+      joinLines: Option[DataFrame] = None): (DataFrame, () => RunStats) =
+    observed(Parser.parseQuery(sql), lines, joinLines)
+
+  /** The statement loop of [[execute]]: `last` builds the last SELECT,
+    * every earlier one is built by `runSelect` and dropped. */
+  private def statements[A](input: String, lines: DataFrame,
+      joinLines: Option[DataFrame])(last: SelectStmt => A): Option[A] = {
+    def flatten(s: Statement): Seq[Statement] = s match {
+      case Statement.Multiple(ss) => ss.flatMap(flatten)
+      case other => Seq(other)
+    }
+    val stmts = flatten(Parser.parse(input))
+    val lastSelect = stmts.lastIndexWhere(_.isInstanceOf[Statement.Select])
+    var out: Option[A] = None
+    stmts.zipWithIndex.foreach {
+      case (Statement.CreateTable(td), _) => define(td)
+      case (Statement.Select(sel), i) =>
+        if (i == lastSelect) out = Some(last(sel)) else runSelect(sel, lines, joinLines)
+      case (Statement.Multiple(_), _) => () // unreachable after flatten
+    }
+    out
+  }
+
+  private def observed(stmt: SelectStmt, lines: DataFrame,
+      joinLines: Option[DataFrame]): (DataFrame, () => RunStats) = {
     // Resolve a `::'file'` FROM source HERE, before observing: runSelect
     // would otherwise replace `lines` with its own spark.read.text, the
     // observed plan would never execute, and the stats() thunk's

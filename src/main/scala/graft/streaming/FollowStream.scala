@@ -1,17 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.core.TableDef
-import graft.parse.Extractor
 
 /** Follow mode (`tail -f`) re-expressed as Structured Streaming
   * (reference `FollowFileExecutor`, `src/executor.rs:175-234`): the
   * reference polls a file for appended lines, re-runs the statement per
   * line, and for aggregates reprints the ENTIRE updated result each
   * update — i.e. exactly Spark's *complete* output mode over a file
-  * stream. Non-aggregate follow queries are *append* mode.
+  * stream. Non-aggregate follow queries are *append* mode. The statement
+  * itself runs through [[graft.sql.SqlEngine]] unchanged: extraction is
+  * pure Catalyst expressions, so it applies to a streaming DataFrame.
   *
   * Superset vs the reference: joins work in follow mode here
   * (stream-static joins) — the reference rejects them
@@ -23,79 +21,4 @@ object FollowStream {
   /** Follow a directory of text files as a stream of raw lines. */
   def lines(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.text(dir)
-
-  /** Parse a followed line stream with a [[TableDef]] — the extraction
-    * stage is pure Catalyst expressions, so it applies to a streaming
-    * DataFrame unchanged. */
-  def parsed(spark: SparkSession, dir: String, table: TableDef): DataFrame =
-    Extractor.parse(lines(spark, dir), table)
-
-  /** Run an aggregate over the followed stream in complete mode into an
-    * in-memory table named `queryName` — each trigger re-emits the full
-    * aggregate state, which is the reference's clear-screen-and-reprint
-    * behavior (`src/executor.rs:218-229`). */
-  def aggregateToMemory(agg: DataFrame, queryName: String): StreamingQuery =
-    agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Non-aggregate follow (projection/filter): append mode. */
-  def selectToMemory(sel: DataFrame, queryName: String): StreamingQuery =
-    sel.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  // ------------------------------------------------- event-time windows
-
-  /** Event-time tumbling-window aggregate with a watermark — the
-    * streaming analog of the reference's GROUP BY over an extracted
-    * timestamp column, made safe for unbounded input: state for windows
-    * older than the watermark is dropped instead of accumulating forever
-    * (the reference's follow mode holds ALL groups in memory for the
-    * life of the process, `src/executor.rs:175-234` — unbounded).
-    *
-    * @param eventTime name of the extracted timestamp column
-    * @param windowDur e.g. "10 minutes"; @param lateness e.g. "5 minutes"
-    */
-  def windowedCounts(parsed: DataFrame, eventTime: String, keyCol: String,
-      windowDur: String, lateness: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    parsed.withWatermark(eventTime, lateness)
-      .groupBy(window(col(eventTime), windowDur), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col(keyCol), col("n"))
-  }
-
-  /** Running per-key totals (count + token sum) via
-    * `mapGroupsWithState` — arbitrary keyed state for semantics the
-    * built-in aggregates can't express (the brief's custom-state path).
-    * Update mode: each trigger emits the new running total for keys that
-    * received data. */
-  def runningTotals(parsed: DataFrame, keyCol: String, tokCol: String)
-      : org.apache.spark.sql.Dataset[KeyTotals] = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    import org.apache.spark.sql.{Encoders, Row}
-    implicit val ke: org.apache.spark.sql.Encoder[String] = Encoders.STRING
-    implicit val oe: org.apache.spark.sql.Encoder[KeyTotals] = Encoders.product[KeyTotals]
-    parsed.select(keyCol, tokCol)
-      .groupByKey((r: Row) => r.getString(0))
-      .mapGroupsWithState[KeyTotals, KeyTotals](GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          var n = 0L; var tok = 0L
-          rows.foreach { r => n += 1; if (!r.isNullAt(1)) tok += r.getLong(1) }
-          val prev = state.getOption.getOrElse(KeyTotals(key, 0L, 0L))
-          val next = KeyTotals(key, prev.n + n, prev.sumTok + tok)
-          state.update(next)
-          next
-      }
-  }
 }
-
-/** Running state carried by [[FollowStream.runningTotals]]. */
-final case class KeyTotals(key: String, n: Long, sumTok: Long)

@@ -13,17 +13,20 @@ import scala.jdk.CollectionConverters._
   * Call sites are Iceberg-shaped so the real runtime can slot in via
   * config outside the sandbox.
   *
-  * Layout:
+  * Layout (this class is its only owner):
   * {{{
-  *   <root>/data/snap=<id>/<sink>/part-*.parquet   — immutable data files
-  *   <root>/_manifests/<id>.json                   — snapshot manifest
-  *   <root>/_current                               — pointer (atomic rename)
+  *   <root>/data/snap=<id>/sink=<sink>/part-*.parquet — immutable data files
+  *   <root>/_pending/<id>/<sink>.json                 — per-sink lineage fragment
+  *   <root>/_pending/<id>/<marker>                    — in-progress markers
+  *   <root>/_manifests/<id>.json                      — snapshot manifest
+  *   <root>/_current                                  — pointer (atomic rename)
   * }}}
   *
   * Commit protocol (crash-safe): data files are fully written under a
-  * snapshot-scoped directory first; the manifest is written next; the
-  * `_current` pointer is the last, atomic step. A crash before the
-  * pointer flip leaves the previous snapshot intact and readable.
+  * snapshot-scoped directory first; per-sink fragments next; the
+  * manifest after them; the `_current` pointer is the last, atomic step.
+  * A crash before the pointer flip leaves the previous snapshot intact
+  * and readable. Every file but the data is written by atomic rename.
   */
 final case class SinkLineage(sink: String, rows: Long, path: String)
 
@@ -59,6 +62,8 @@ object Manifest {
 
 class ManifestTable(root: String) {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
+  private def manifestPath(snapshotId: Long): Path = p("_manifests", s"$snapshotId.json")
+  private def pending(snapshotId: Long, name: String): Path = p("_pending", s"$snapshotId", name)
 
   def currentSnapshotId: Option[Long] = {
     val cur = p("_current")
@@ -68,9 +73,21 @@ class ManifestTable(root: String) {
 
   def manifest(snapshotId: Long): Manifest =
     Manifest.fromJson(new String(
-      Files.readAllBytes(p("_manifests", s"$snapshotId.json")), StandardCharsets.UTF_8))
+      Files.readAllBytes(manifestPath(snapshotId)), StandardCharsets.UTF_8))
 
-  def currentManifest: Option[Manifest] = currentSnapshotId.map(manifest)
+  /** True once `commit(snapshotId)` has written the snapshot's manifest. */
+  def isCommitted(snapshotId: Long): Boolean = Files.exists(manifestPath(snapshotId))
+
+  /** Where a snapshot's data files go: one `sink=<name>` directory per
+    * sink, as a `partitionBy("sink")` write lays them out. */
+  def dataDir(snapshotId: Long): Path = p("data", s"snap=$snapshotId")
+
+  /** The sinks written under [[dataDir]], by name, with their paths. */
+  def dataSinks(snapshotId: Long): Seq[(String, String)] =
+    Files.list(dataDir(snapshotId)).iterator().asScala.toSeq
+      .collect { case d if d.getFileName.toString.startsWith("sink=") =>
+        d.getFileName.toString.stripPrefix("sink=") -> d.toString }
+      .sorted
 
   /** Sinks already committed in an *in-progress* snapshot (manifest
     * fragments under `_pending/<id>/`) — the resume unit. */
@@ -83,32 +100,29 @@ class ManifestTable(root: String) {
       .flatMap(_.sinks).map(l => l.sink -> l).toMap
   }
 
-  /** Write one sink's data files + its lineage fragment. Idempotent per
-    * (snapshotId, sink): a completed fragment short-circuits the write —
-    * this is what makes a re-run resume instead of recompute. */
-  def writeSink(df: => DataFrame, snapshotId: Long, sink: String): SinkLineage = {
-    completedSinks(snapshotId).get(sink) match {
-      case Some(done) => done
-      case None =>
-        val dataPath = p("data", s"snap=$snapshotId", s"sink=$sink").toString
-        val out = df
-        out.write.mode("overwrite").parquet(dataPath)
-        val rows = out.sparkSession.read.parquet(dataPath).count()
-        val lineage = SinkLineage(sink, rows, dataPath)
-        Files.createDirectories(p("_pending", s"$snapshotId"))
-        atomicWrite(p("_pending", s"$snapshotId", s"$sink.json"),
-          Manifest(snapshotId, None, Seq(lineage)).toJson)
-        lineage
-    }
+  /** Record one sink of an in-progress snapshot; [[commit]] collects it. */
+  def addFragment(snapshotId: Long, lineage: SinkLineage): Unit =
+    atomicWrite(pending(snapshotId, s"${lineage.sink}.json"),
+      Manifest(snapshotId, None, Seq(lineage)).toJson)
+
+  /** A named marker of an in-progress snapshot, if written. */
+  def marker(snapshotId: Long, name: String): Option[String] = {
+    val f = pending(snapshotId, name)
+    if (Files.exists(f)) Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+    else None
   }
+
+  /** `name` must not end in `.json`: [[completedSinks]] reads those as
+    * fragments. */
+  def writeMarker(snapshotId: Long, name: String, content: String): Unit =
+    atomicWrite(pending(snapshotId, name), content)
 
   /** Seal a snapshot: collect fragments into one manifest, flip the
     * `_current` pointer atomically. */
   def commit(snapshotId: Long): Manifest = {
     val parent = currentSnapshotId
     val m = Manifest(snapshotId, parent, completedSinks(snapshotId).values.toSeq.sortBy(_.sink))
-    Files.createDirectories(p("_manifests"))
-    atomicWrite(p("_manifests", s"$snapshotId.json"), m.toJson)
+    atomicWrite(manifestPath(snapshotId), m.toJson)
     atomicWrite(p("_current"), snapshotId.toString)
     m
   }

@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.core._
 import graft.sources.Sinks
@@ -43,15 +44,24 @@ import graft.streaming.FollowStream
 object Repl {
 
   /** Console print of a single-string-column sink frame: one partition
-    * resident on the driver at a time (`toLocalIterator`), not a full
-    * `collect()` — an unbounded SELECT streams like the reference's
-    * row-by-row printer instead of materializing the entire result in
-    * driver memory (round-5 verdict finding #2). Output order is
-    * identical to collect (partition order, rows in order within each
-    * partition; ReplStreamSpec pins the parity). */
+    * resident on the driver at a time (the iterator `toLocalIterator`
+    * uses), not a full `collect()` — an unbounded SELECT streams like the
+    * reference's row-by-row printer instead of materializing the entire
+    * result in driver memory (round-5 verdict finding #2). Output order
+    * is identical to collect (partition order, rows in order within each
+    * partition; ReplStreamSpec pins the parity).
+    *
+    * The rows are drained inside the query's own SQL execution, so it
+    * ends after the last row: `toLocalIterator` ends it when it hands
+    * out the iterator, before any row is computed, and `observe` metrics
+    * (`--show-run-stats`) then complete with zero lines for every
+    * SELECT that has no shuffle. */
   private[graft] def printRows(rendered: DataFrame): Unit = {
-    val it = rendered.toLocalIterator()
-    while (it.hasNext) println(it.next().getString(0))
+    val qe = rendered.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("printRows")) {
+      val it = qe.executedPlan.executeToIterator()
+      while (it.hasNext) println(it.next().getUTF8String(0))
+    }
   }
 
   private[tools] final case class Args(
@@ -226,19 +236,14 @@ object Repl {
 
     def runStatements(input: String): Unit = {
       if (args.follow) runFollow(input)
-      else {
-        if (args.showRunStats && !input.trim.toUpperCase.startsWith("CREATE")) {
-          val (df, stats) = eng.queryWithStats(input, lines)
+      else if (args.showRunStats) {
+        eng.executeWithStats(input, lines).foreach { case (df, stats) =>
           printSink(df)
           val s = stats()
           println(f"Executed query in ${s.seconds}%.2f seconds, ingested " +
             f"${s.bytesProcessed / 1024.0 / 1024.0}%.2f MB, processed ${s.linesProcessed} lines.")
-        } else {
-          eng.execute(input, lines).foreach { df =>
-            printSink(df)
-          }
         }
-      }
+      } else eng.execute(input, lines).foreach(printSink)
     }
 
     /** Follow mode: run the statement over the file stream; aggregates

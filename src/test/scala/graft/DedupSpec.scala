@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SimHash64
 import graft.operators.{Dedup, Multimodal, Similarity}
 
-/** Hash-based dedup + similarity operators: validated with planted
-  * near-duplicates (no cross-engine oracle exists for murmur/FNV
-  * signatures — determinism and recall are the contracts). */
+/** Dedup + similarity operators: validated with planted near-duplicates
+  * (no cross-engine oracle exists for the LSH hash functions —
+  * determinism and recall are the contracts). */
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,70 +34,6 @@ class DedupSpec extends SparkSpec {
     assert(out.filter(col("id") === 1000L).count() === 1)
   }
 
-  test("minhash LSH finds planted near-dup pairs and no noise pairs") {
-    val pairs = Dedup.minhashLsh(corpus, col("id"), col("text"),
-        shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1000L, 1001L)))
-    assert(pairs.contains((2000L, 2001L)))
-    assert(pairs.forall { case (a, b) => (a >= 1000 && b >= 1000) },
-      s"noise pair leaked: $pairs")
-  }
-
-  test("simhash: signatures distinct on noise; planted near-dups found (relaxed radius)") {
-    val sig = corpus.select(SimHash64(split(col("text"), "\\s+")).as("s"))
-    assert(sig.distinct().count() > 200 - 5) // signatures mostly unique on noise
-    // 12-token docs give noisy signatures, so the planted pairs sit past
-    // the hamming<=3 envelope where chunk blocking GUARANTEES recall;
-    // at 16 the operator is best-effort (pairs must share some 16-bit
-    // chunk) — deterministic here, and these planted pairs do.
-    val pairs = Dedup.simhashPairs(corpus, col("id"), col("text"), maxHamming = 16)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1000L, 1001L)), s"got $pairs")
-    assert(pairs.contains((2000L, 2001L)), s"got $pairs")
-  }
-
-  test("simhash blocking is EXACT within the guaranteed hamming<=3 envelope") {
-    // pigeonhole contract: 64-bit sig in 4 chunks, hamming<=3 implies
-    // >=1 identical chunk — so blocked pairs == brute-force pairs.
-    val sigs = corpus.select(col("id"), SimHash64(split(col("text"), "\\s+")).as("sig"))
-    val l = sigs.as("l"); val r = sigs.as("r")
-    val brute = l.crossJoin(r).filter(col("l.id") < col("r.id"))
-      .withColumn("h", SimHash64.hamming(col("l.sig"), col("r.sig")))
-      .filter(col("h") <= 3)
-      .select(col("l.id"), col("r.id")).as[(Long, Long)].collect().toSet
-    val blocked = Dedup.simhashPairs(corpus, col("id"), col("text"), maxHamming = 3)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(blocked === brute)
-  }
-
-  test("simhash expression is deterministic and codegen path matches eval path") {
-    val df = Seq("hello world foo bar", "hello world foo baz").toDF("t")
-      .select(SimHash64(split(col("t"), " ")).as("s"))
-    val a = df.collect().map(_.getLong(0))
-    val b = df.collect().map(_.getLong(0))
-    assert(a.toSeq === b.toSeq)
-    assert(a(0) !== a(1))
-    // hamming of near-identical word sets is small
-    val h = java.lang.Long.bitCount(a(0) ^ a(1))
-    assert(h <= 24, s"hamming $h unexpectedly large")
-  }
-
-  test("MinHashSignature is bit-identical to the HOF formulation it replaced") {
-    val sh = corpus.select(col("id"), Dedup.shingles(col("text"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val numHashes = 32
-    val hof = array((0 until numHashes).map(seed =>
-      array_min(transform(col("sh"), s => hash(s, lit(seed))))): _*)
-    val both = sh.select(col("id"),
-      Dedup.minhashSignature(col("sh"), numHashes).as("fast"), hof.as("slow"))
-    assert(both.filter(not(col("fast") <=> col("slow"))).count() === 0)
-    // codegen path matches interpreted eval (determinism across runs)
-    val a = both.select("fast").collect().map(_.getSeq[Int](0))
-    val b = both.select("fast").collect().map(_.getSeq[Int](0))
-    assert(a.map(_.toList).toSeq === b.map(_.toList).toSeq)
-  }
-
   test("cosine is NULL on length mismatch (zip_with null-pad parity) and zero norm") {
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)),
@@ -124,17 +59,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("degenerate bucket (identical boilerplate) is capped, not quadratized") {
-    // 5000 identical docs would form ONE bucket with 12.5M candidate
-    // pairs; the maxBucket guard drops the bucket wholesale while the
-    // planted pair in a healthy bucket still surfaces.
+    // 5000 identical docs share every posting list of their 5 shingles:
+    // 12.5M candidate pairs in one block; the maxPosting guard drops
+    // those posting lists wholesale while the planted pair, whose
+    // shingles sit in healthy posting lists, still surfaces exactly.
     val boiler = (10000 until 15000).map(i => (i.toLong, "lorem ipsum dolor sit amet " * 3))
     val df = corpus.union(boiler.toDF("id", "text"))
-    val pairs = Dedup.minhashLsh(df, col("id"), col("text"),
-        shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1000L, 1001L)))
-    assert(!pairs.exists { case (a, b) => a >= 10000 || b >= 10000 },
-      "boilerplate bucket leaked candidate pairs")
+    val pairs = Dedup.ngramJaccard(df, col("id"), col("text"), lit(0),
+        shingleN = 3, threshold = 0.5, maxPosting = 100)
+      .as[(Long, Long, Double)].collect()
+    val m = pairs.map(p => (p._1, p._2) -> p._3).toMap
+    assert(m.contains((1000L, 1001L)), s"planted pair lost: ${m.keys}")
+    assert(math.abs(m((1000L, 1001L)) - 9.0 / 11.0) < 1e-12)
+    assert(!pairs.exists(p => p._1 >= 10000 || p._2 >= 10000),
+      "boilerplate posting lists leaked candidate pairs")
   }
 
   test("embeddingNearDup: degenerate block is capped, healthy blocks unaffected") {
@@ -255,63 +193,6 @@ class DedupSpec extends SparkSpec {
       val want = gr.map(t => (t._2, t._3)).sortBy { case (id, s) => (-s, id) }.take(3)
       assert(got(g) === want, s"group $g")
     }
-  }
-
-  test("dropNearDuplicates keeps the lowest id of each planted pair") {
-    val pairs = Dedup.minhashLsh(corpus, col("id"), col("text"),
-      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
-    val kept = Dedup.dropNearDuplicates(corpus, col("id"), pairs)
-    val ids = kept.select("id").as[Long].collect().toSet
-    assert(ids.contains(1000L) && !ids.contains(1001L))
-    assert(ids.contains(2000L) && !ids.contains(2001L))
-    assert((0 until 200).forall(i => ids.contains(i.toLong))) // noise untouched
-  }
-
-  test("IVF ANN achieves >=60% recall@5 vs brute force on random embeddings") {
-    val embs = spark.range(300).select(col("id"),
-      transform(sequence(lit(0), lit(15)),
-        d => (pmod(hash(col("id"), d), lit(1000)).cast("double") - 500.0) / 500.0).as("emb"))
-    val queries = embs.filter(col("id") < 10)
-    def collectNeighbors(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "nn_id").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val exact = collectNeighbors(Similarity.bruteForceTopK(
-      embs, col("id"), col("emb"), queries, col("id"), col("emb"), k = 5))
-    val approx = collectNeighbors(Similarity.ivfTopK(
-      embs, col("id"), col("emb"), queries, col("id"), col("emb"),
-      k = 5, nlist = 16, nprobe = 6, lloydIters = 1))
-    val recalls = exact.map { case (q, nn) =>
-      approx.get(q).map(a => (a & nn).size.toDouble / nn.size).getOrElse(0.0)
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.6, s"mean recall@5 = $mean")
-    // sampled-Lloyd training (the 100 TB path: refinement reads a
-    // hash-sample, not the corpus) must not collapse recall
-    val sampled = collectNeighbors(Similarity.ivfTopK(
-      embs, col("id"), col("emb"), queries, col("id"), col("emb"),
-      k = 5, nlist = 16, nprobe = 6, lloydIters = 1, trainFraction = 0.5))
-    val sRecalls = exact.map { case (q, nn) =>
-      sampled.get(q).map(a => (a & nn).size.toDouble / nn.size).getOrElse(0.0)
-    }
-    val sMean = sRecalls.sum / sRecalls.size
-    assert(sMean >= 0.6, s"sampled-Lloyd mean recall@5 = $sMean")
-  }
-
-  test("NearestCentroids: codegen matches eval, ordered by cosine, deterministic") {
-    import graft.functions.NearestCentroids
-    val cents = Array(
-      Array(1.0, 0.0, 0.0, 0.0),
-      Array(0.0, 1.0, 0.0, 0.0),
-      Array(0.7, 0.7, 0.0, 0.0),
-      Array(0.0, 0.0, 5.0, 0.0)) // un-normalized on purpose
-    val df = Seq(Seq(0.9, 0.1, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 0.0))
-      .toDF("e").select(NearestCentroids(col("e"), cents, 3).as("nc"))
-    val rows = df.as[Seq[Int]].collect()
-    // row 0: nearest = x-axis (0), then diagonal (2), then y-axis (1)
-    assert(rows(0) === Seq(0, 2, 1))
-    // row 1: z-axis centroid wins despite magnitude 5 (cosine, not dot)
-    assert(rows(1).head === 3)
-    assert(df.as[Seq[Int]].collect().toSeq === rows.toSeq) // deterministic
   }
 
   test("multimodal decode: batch stage output matches per-row expectation") {

@@ -211,27 +211,13 @@ class PlanQualitySpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Seq(
       "ngram" -> Dedup.ngramJaccard(docs, col("doc_id"), col("text"), col("source"),
-        shingleN = 3, threshold = 0.3),
-      "minhash" -> Dedup.minhashLsh(docs, col("doc_id"), col("text")),
-      "simhash" -> Dedup.simhashPairs(docs, col("doc_id"), col("text"))
+        shingleN = 3, threshold = 0.3)
     ).foreach { case (name, df) =>
       val plan = executedPlan(df)
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),
         s"$name candidate join degenerated to a cross product:\n$plan")
     }
-  }
-
-  test("near-dup signature paths contain no interpreted HOF nodes") {
-    // MinHash signatures were the last interpreted-HOF hot path: Spark
-    // higher-order functions (ArrayTransform/ArrayAggregate/ZipWith) are
-    // CodegenFallback and scale negatively at wide parallelism.
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val plan = executedPlan(Dedup.minhashLsh(docs, col("doc_id"), col("text")))
-    // HOFs print by prettyName, so the robust marker is their lambda child
-    assert(!plan.contains("lambdafunction"), s"interpreted HOF in minhashLsh plan:\n$plan")
-    assert(plan.contains("minhash_signature"), s"codegen signature missing:\n$plan")
   }
 
   test("ANN re-rank is a k-bounded partial aggregate, not a per-query window sort") {

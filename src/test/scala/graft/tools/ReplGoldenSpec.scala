@@ -92,4 +92,24 @@ class ReplGoldenSpec extends SparkSpec {
     check("input_text.golden", "-d", ddl,
       "-c", "SELECT input FROM connections WHERE day = 23;", "--format", "text", data)
   }
+
+  test("--show-run-stats over multi-statement input: the last SELECT's rows and stats, none for DDL") {
+    val stats = """Executed query in \d+\.\d\d seconds, ingested \d+\.\d\d MB, processed (\d+) lines\.""".r
+    val nLines = Files.readAllLines(Paths.get(data)).size.toString
+    def golden(name: String) =
+      new String(Files.readAllBytes(Paths.get(s"$resDir/$name")), StandardCharsets.UTF_8)
+    /** The run's output without its stats lines, and the line counts they report. */
+    def split(out: String): (String, Seq[String]) = {
+      val (st, rows) = out.linesIterator.toSeq.partition(stats.matches)
+      (rows.map(_ + "\n").mkString, st.map { case stats(n) => n })
+    }
+    val agg = "SELECT hostname, COUNT() AS count FROM connections GROUP BY hostname;"
+    assert(split(runCli("-d", ddl, "--show-run-stats", "-c",
+      "SELECT ip FROM connections WHERE day = 23; " + agg, data)) ===
+      (golden("agg_text.golden"), Seq(nLines)))
+    val ddlText = new String(Files.readAllBytes(Paths.get(ddl)), StandardCharsets.UTF_8)
+    assert(split(runCli("--show-run-stats", "-c", ddlText + select, data)) ===
+      (golden("select_text.golden"), Seq(nLines)))
+    assert(runCli("--show-run-stats", "-c", ddlText, data) === "")
+  }
 }
