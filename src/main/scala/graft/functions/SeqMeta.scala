@@ -35,16 +35,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * route aggregates) regenerate a ~500-element array per row that the
   * plan then throws away.
   */
-case class SeqMeta(child: Expression, maxTok: Int) extends UnaryExpression {
+case class SeqMeta(child: Expression) extends UnaryExpression {
   override def dataType: DataType = SeqMeta.schema
   override def prettyName: String = "seq_meta"
 
   override def nullSafeEval(seqId: Any): Any =
-    SeqMeta.compute(seqId.asInstanceOf[Long], maxTok)
+    SeqMeta.compute(seqId.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, seqId =>
-      s"${ev.value} = graft.functions.SeqMeta.compute($seqId, $maxTok);")
+      s"${ev.value} = graft.functions.SeqMeta.compute($seqId);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -53,8 +53,8 @@ case class SeqMeta(child: Expression, maxTok: Int) extends UnaryExpression {
 object SeqMeta {
   import org.apache.spark.sql.graftbridge.Bridge
 
-  def apply(seqId: Column, maxTok: Int): Column =
-    Bridge.column(SeqMeta(Bridge.expression(seqId), maxTok))
+  def apply(seqId: Column): Column =
+    Bridge.column(SeqMeta(Bridge.expression(seqId)))
 
   val schema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
@@ -77,12 +77,12 @@ object SeqMeta {
     * (and the DuckDB oracle CTE): Java remainder semantics throughout,
     * so negative seqIds (never produced by the guarded generators) still
     * agree with the Column formulation. */
-  def compute(seqId: Long, maxTok: Int): InternalRow = {
+  def compute(seqId: Long): InternalRow = {
     val s = ((seqId % M) * 131071L + 524287L) % M
     val r1 = (s * A + C) % M
     val r2 = (r1 * A + C) % M
     val r3 = (r2 * A + C) % M
-    val nTok = math.min(8L + (r1 % 45L) * (r2 % 46L), maxTok.toLong).toInt
+    val nTok = (8L + (r1 % 45L) * (r2 % 46L)).toInt // at most 8 + 44 * 45 = 1988
     val srcSel = r2 % 100L
     val source =
       if (srcSel < 45L) Web

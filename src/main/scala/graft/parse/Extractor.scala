@@ -193,9 +193,4 @@ object Extractor {
   // executor samples and serialized the 32-core parse stage.
   private[graft] def try_cast_to(c: Column, t: DataType): Column =
     c.cast(t)
-  private def try_to_timestamp(c: Column, fmt: Column): Column =
-    org.apache.spark.sql.functions.try_to_timestamp(c, fmt)
-  private def try_make_timestamp(y: Column, mo: Column, d: Column,
-      h: Column, mi: Column, s: Column): Column =
-    org.apache.spark.sql.functions.try_make_timestamp(y, mo, d, h, mi, s)
 }

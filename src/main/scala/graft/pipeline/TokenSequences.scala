@@ -17,7 +17,6 @@ import org.apache.spark.sql.types._
 object TokenSequences {
 
   val VocabSize = 50257L
-  val MaxTok = 2048
 
   /** Adds doc_id/tokens/n_tok/source columns derived from a 64-bit
     * `seqId` column. The first mixing step reduces seqId mod 2^31 before
@@ -36,9 +35,8 @@ object TokenSequences {
     * scaladoc for the measurements). The five GetStructField readers
     * below collapse to a single evaluation per row via codegen
     * subexpression elimination. */
-  def withSequenceColumns(df: DataFrame, seqId: Column,
-      maxTok: Int = MaxTok): DataFrame = {
-    val meta = graft.functions.SeqMeta(seqId, maxTok)
+  def withSequenceColumns(df: DataFrame, seqId: Column): DataFrame = {
+    val meta = graft.functions.SeqMeta(seqId)
     // tokens stay a SEPARATE TokenGen column (not a SeqMeta field):
     // Catalyst prunes whole columns but not struct fields of an opaque
     // expression, and the SQL-path / route-aggregate gates never read

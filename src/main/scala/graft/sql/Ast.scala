@@ -45,6 +45,24 @@ object Expr {
   /** True when `p` holds for `e` or any expression nested in it. */
   def exists(e: Expr)(p: Expr => Boolean): Boolean =
     p(e) || children(e).exists(exists(_)(p))
+
+  /** The function names the dialect accepts, lower case: aggregates,
+    * then scalar functions ([[Translator]] implements each). */
+  val aggregateNames: Seq[String] = Seq("count", "min", "max", "sum", "avg",
+    "stddev", "variance", "percentile", "bool_and", "bool_or",
+    "array_agg", "string_agg")
+  val scalarNames: Seq[String] = Seq("greatest", "least", "abs", "sqrt", "pow",
+    "length", "upper", "lower", "regexp_matches", "regex_matches", "create_array",
+    "array_unique", "array_length", "array_cat", "array_append", "array_prepend",
+    "now", "make_timestamp", "date_trunc")
+
+  /** Aggregate calls in `e`, outermost first (reference allows at most
+    * one per projection — quirk 14). */
+  def findAggregates(e: Expr): Seq[Call] = e match {
+    case c @ Call(n, args, _) if aggregateNames.contains(n) =>
+      Seq(c) ++ args.flatMap(findAggregates)
+    case other => children(other).flatMap(findAggregates)
+  }
 }
 
 final case class JoinClause(

@@ -3,16 +3,32 @@ package graft.sql
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.parse.Extractor
 
-/** Per-query execution statistics (reference `--show-run-stats`,
-  * `src/executor.rs:12-36`). */
-final case class RunStats(seconds: Double, linesProcessed: Long,
-    bytesProcessed: Long, rowsMatched: Long)
+/** Lines and bytes a SELECT read from its FROM input (reference
+  * `--show-run-stats`, `src/executor.rs:12-36`), counted on the running
+  * plan by one `Dataset.observe` named [[RunStats.Name]]. */
+final case class RunStats(linesProcessed: Long, bytesProcessed: Long)
+
+object RunStats {
+  val Name = "sqlgrep_run_stats"
+
+  /** `lines` with its line and byte counts attached: `octet_length`,
+    * because the reference reports BYTES ingested (a reader-level count)
+    * and `length` would count characters. */
+  private[sql] def observe(lines: DataFrame): DataFrame = lines.observe(Name,
+    count(lit(1)).as("lines"),
+    coalesce(sum(octet_length(col(lines.columns.head)).cast("long")), lit(0L)).as("bytes"))
+
+  /** The counts of the query `qe` ran (zero when its plan read no line). */
+  def of(qe: QueryExecution): RunStats = qe.observedMetrics.get(Name)
+    .fold(RunStats(0L, 0L))(r => RunStats(r.getAs[Long]("lines"), r.getAs[Long]("bytes")))
+}
 
 /** The user-facing engine: a drop-in for the reference CLI's capability
   * surface — register CREATE TABLE extraction DSL, run SELECT queries
@@ -30,9 +46,14 @@ final case class RunStats(seconds: Double, linesProcessed: Long,
   * second query over the same cached `lines` object on, a SELECT that
   * does not read `input` scans the table's extracted columns, kept with
   * `Dataset.cache()`, instead of re-running the regex extraction. The
-  * first query, uncached or streaming input, `::'file'` sources, the
-  * join side and the stats path ([[queryWithStats]],
-  * [[executeWithStats]]) run the extraction as before.
+  * first query, uncached or streaming input, `::'file'` sources and the
+  * join side run the extraction as before.
+  *
+  * `execute(..., stats = true)` is the `--show-run-stats` surface: the
+  * SELECT runs the same plan, and [[RunStats.of]] reads its line and
+  * byte counts from the query execution that ran it. A materialized
+  * parse carries the observation in its cached plan, so over it the
+  * counts are those of the lines the parse was built from.
   */
 final class SqlEngine(spark: SparkSession) {
   private val tables = mutable.LinkedHashMap[String, TableDef]()
@@ -67,86 +88,34 @@ final class SqlEngine(spark: SparkSession) {
   /** Run a query. `lines` backs the FROM table; `joinLines` backs the
     * joined table (defaults to reading the join clause's `::'file'`). */
   def query(sql: String, lines: DataFrame, joinLines: Option[DataFrame] = None): DataFrame =
-    runSelect(Parser.parseQuery(sql), lines, joinLines)
+    runSelect(Parser.parseQuery(sql), lines, joinLines, stats = false)
 
   /** Execute a possibly MULTI-statement input (reference
     * `Statement::Multiple`, `src/model.rs:58-63` executed at
     * `src/main.rs:141-144`): CREATE TABLE statements register their
     * tables in order, each SELECT runs against `lines` with the tables
     * registered so far; the last SELECT's DataFrame is returned (None for
-    * pure DDL). */
-  def execute(input: String, lines: DataFrame,
-      joinLines: Option[DataFrame] = None): Option[DataFrame] =
-    statements(input, lines, joinLines)(runSelect(_, lines, joinLines))
-
-  /** [[execute]] with the last SELECT observed as by [[queryWithStats]]
-    * (None for pure DDL). */
-  def executeWithStats(input: String, lines: DataFrame,
-      joinLines: Option[DataFrame] = None): Option[(DataFrame, () => RunStats)] =
-    statements(input, lines, joinLines)(observed(_, lines, joinLines))
-
-  /** Like [[query]] but with the reference's `--show-run-stats` surface
-    * (`src/executor.rs:12-36`, printed at `src/main.rs:210-216`): input
-    * lines / bytes ingested and result rows, collected via `observe`
-    * metrics on the running plan — zero extra passes. Trigger an action
-    * on the returned DataFrame first; the thunk then yields the stats
-    * (it blocks until the action completes). */
-  def queryWithStats(sql: String, lines: DataFrame,
-      joinLines: Option[DataFrame] = None): (DataFrame, () => RunStats) =
-    observed(Parser.parseQuery(sql), lines, joinLines)
-
-  /** The statement loop of [[execute]]: `last` builds the last SELECT,
-    * every earlier one is built by `runSelect` and dropped. */
-  private def statements[A](input: String, lines: DataFrame,
-      joinLines: Option[DataFrame])(last: SelectStmt => A): Option[A] = {
+    * pure DDL). With `stats`, the SELECTs observe their FROM input for
+    * [[RunStats.of]]. */
+  def execute(input: String, lines: DataFrame, joinLines: Option[DataFrame] = None,
+      stats: Boolean = false): Option[DataFrame] = {
     def flatten(s: Statement): Seq[Statement] = s match {
       case Statement.Multiple(ss) => ss.flatMap(flatten)
       case other => Seq(other)
     }
-    val stmts = flatten(Parser.parse(input))
-    val lastSelect = stmts.lastIndexWhere(_.isInstanceOf[Statement.Select])
-    var out: Option[A] = None
-    stmts.zipWithIndex.foreach {
-      case (Statement.CreateTable(td), _) => define(td)
-      case (Statement.Select(sel), i) =>
-        if (i == lastSelect) out = Some(last(sel)) else runSelect(sel, lines, joinLines)
-      case (Statement.Multiple(_), _) => () // unreachable after flatten
+    flatten(Parser.parse(input)).foldLeft(Option.empty[DataFrame]) {
+      case (out, Statement.CreateTable(td)) => define(td); out
+      case (_, Statement.Select(sel)) => Some(runSelect(sel, lines, joinLines, stats))
+      case (out, Statement.Multiple(_)) => out // unreachable after flatten
     }
-    out
-  }
-
-  private def observed(stmt: SelectStmt, lines: DataFrame,
-      joinLines: Option[DataFrame]): (DataFrame, () => RunStats) = {
-    // Resolve a `::'file'` FROM source HERE, before observing: runSelect
-    // would otherwise replace `lines` with its own spark.read.text, the
-    // observed plan would never execute, and the stats() thunk's
-    // Observation.get would block forever.
-    val src = stmt.fromFile.map(f => spark.read.text(f)).getOrElse(lines)
-    val obsIn = org.apache.spark.sql.Observation()
-    val obsOut = org.apache.spark.sql.Observation()
-    val t0 = System.nanoTime()
-    val inCol = col(src.columns.head)
-    // octet_length: the reference reports BYTES ingested (reader-level
-    // byte count) — length() counts characters and undercounts UTF-8
-    val observedIn = src.observe(obsIn,
-      count(lit(1)).as("lines"),
-      coalesce(sum(octet_length(inCol).cast("long")), lit(0L)).as("bytes"))
-    val out = runSelect(stmt.copy(fromFile = None), observedIn, joinLines)
-      .observe(obsOut, count(lit(1)).as("rows"))
-    val stats = () => RunStats(
-      seconds = (System.nanoTime() - t0) / 1e9,
-      linesProcessed = obsIn.get("lines").asInstanceOf[Long],
-      bytesProcessed = obsIn.get("bytes").asInstanceOf[Long],
-      rowsMatched = obsOut.get("rows").asInstanceOf[Long])
-    (out, stats)
   }
 
   private def runSelect(stmt: SelectStmt, lines: DataFrame,
-      joinLines: Option[DataFrame]): DataFrame = {
+      joinLines: Option[DataFrame], stats: Boolean): DataFrame = {
     val td = tableDef(stmt.from)
     val parsed = stmt.fromFile match {
-      case Some(f) => Extractor.parse(spark.read.text(f).toDF("value"), td, keepInput = true)
-      case None => fromTable(td, lines, readsInput(stmt))
+      case Some(f) => extract(td, spark.read.text(f), stats)
+      case None => fromTable(td, lines, readsInput(stmt), stats)
     }
 
     // scope: bare + qualified names for the FROM table, plus `input`;
@@ -160,10 +129,8 @@ final class SqlEngine(spark: SparkSession) {
       ("input" -> ValueType.TextT)
     var projOrder: Seq[String] = td.columns.map(_.name)
 
-    val isAggregate = stmt.groupBy.isDefined || {
-      val t = new Translator(parsed, scope)
-      (stmt.projections.map(_._2) ++ stmt.having.toSeq).exists(e => t.findAggregates(e).nonEmpty)
-    }
+    val isAggregate = stmt.groupBy.isDefined ||
+      (stmt.projections.map(_._2) ++ stmt.having).exists(e => Expr.findAggregates(e).nonEmpty)
 
     // ------------------------------------------------------------- join
     val joined: DataFrame = stmt.join match {
@@ -225,8 +192,11 @@ final class SqlEngine(spark: SparkSession) {
   /** The FROM table's rows over `lines`. The first query over a cached
     * `lines` object records it; later queries over the same object that
     * do not read `input` share one cached parse without the `input`
-    * column. A different or uncached input releases that parse. */
-  private def fromTable(td: TableDef, lines: DataFrame, readsInput: Boolean): DataFrame = {
+    * column. A different or uncached input releases that parse. The
+    * cached parse always observes its lines, once, as it is built; the
+    * extraction observes them for a `stats` query only. */
+  private def fromTable(td: TableDef, lines: DataFrame, readsInput: Boolean,
+      stats: Boolean): DataFrame = {
     val cached = lines.storageLevel != StorageLevel.NONE
     val seen = parses.get(td.name).filter(p => cached && (p.input eq lines))
     if (seen.isEmpty) {
@@ -235,11 +205,17 @@ final class SqlEngine(spark: SparkSession) {
     }
     seen match {
       case Some(p) if !readsInput =>
-        if (p.parsed.isEmpty) p.parsed = Some(Extractor.parse(lines.toDF("value"), td).cache())
+        if (p.parsed.isEmpty)
+          p.parsed = Some(Extractor.parse(RunStats.observe(lines).toDF("value"), td).cache())
         p.parsed.get
-      case _ => Extractor.parse(lines.toDF("value"), td, keepInput = true)
+      case _ => extract(td, lines, stats)
     }
   }
+
+  /** The extraction over `lines`, with `input`; a `stats` query counts the lines. */
+  private def extract(td: TableDef, lines: DataFrame, stats: Boolean): DataFrame =
+    Extractor.parse((if (stats) RunStats.observe(lines) else lines).toDF("value"), td,
+      keepInput = true)
 
   /** True when the statement reads the `input` pseudo-column. */
   private def readsInput(stmt: SelectStmt): Boolean = {
@@ -281,11 +257,11 @@ final class SqlEngine(spark: SparkSession) {
     // collect aggregates from projections + having (hidden accumulators,
     // reference A11)
     val aggAlias = mutable.LinkedHashMap[Expr.Call, String]()
-    def registerAggs(e: Expr): Unit = trans.findAggregates(e).foreach { c =>
+    def registerAggs(e: Expr): Unit = Expr.findAggregates(e).foreach { c =>
       if (!aggAlias.contains(c)) aggAlias(c) = s"__agg_${aggAlias.size}"
     }
     stmt.projections.foreach { case (_, e) =>
-      val n = trans.findAggregates(e).length
+      val n = Expr.findAggregates(e).length
       if (n > 1) throw new IllegalArgumentException(
         "at most one aggregate per projection (reference quirk 14)")
       registerAggs(e)

@@ -22,10 +22,6 @@ final class Translator(base: DataFrame, scope: Map[String, Column],
   import Expr._
   import graft.core.ValueType
 
-  private val aggregateNames = Set("count", "min", "max", "sum", "avg",
-    "stddev", "variance", "percentile", "bool_and", "bool_or",
-    "array_agg", "string_agg")
-
   // ------------------------------------------------------------- type probe
 
   private def dtypeOf(c: Column): DataType =
@@ -273,14 +269,6 @@ final class Translator(base: DataFrame, scope: Map[String, Column],
       }
       case other => throw new IllegalArgumentException(s"unknown aggregate: $other")
     }
-  }
-
-  /** Find aggregate calls in an expression (reference allows at most one
-    * per projection — quirk 14). */
-  def findAggregates(e: Expr): Seq[Call] = e match {
-    case c @ Call(n, args, _) if aggregateNames.contains(n) =>
-      Seq(c) ++ args.flatMap(findAggregates)
-    case other => Expr.children(other).flatMap(findAggregates)
   }
 
   /** Replace a specific aggregate call / group-key subtree with a column

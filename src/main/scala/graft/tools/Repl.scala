@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.SQLExecution
 
 import graft.core._
 import graft.sources.Sinks
-import graft.sql.SqlEngine
+import graft.sql.{Expr, RunStats, SqlEngine}
 import graft.streaming.FollowStream
 
 /** The reference CLI re-expressed over [[SqlEngine]] — same surface as
@@ -53,9 +53,9 @@ object Repl {
     *
     * The rows are drained inside the query's own SQL execution, so it
     * ends after the last row: `toLocalIterator` ends it when it hands
-    * out the iterator, before any row is computed, and `observe` metrics
-    * (`--show-run-stats`) then complete with zero lines for every
-    * SELECT that has no shuffle. */
+    * out the iterator, before any row is computed, and the execution's
+    * end event (the UI, `Observation` listeners) would then report a
+    * query that read nothing. */
   private[graft] def printRows(rendered: DataFrame): Unit = {
     val qe = rendered.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("printRows")) {
@@ -118,12 +118,7 @@ object Repl {
       "CREATE", "TABLE", "AND", "OR", "NOT", "IS", "IN", "AS", "CASE", "WHEN",
       "THEN", "ELSE", "END", "EXTRACT", "INNER", "OUTER", "JOIN", "ON",
       "LIMIT", "DISTINCT", "DEFAULT")
-    val functions = Seq("COUNT", "MIN", "MAX", "SUM", "AVG", "STDDEV",
-      "VARIANCE", "PERCENTILE", "BOOL_AND", "BOOL_OR", "ARRAY_AGG",
-      "STRING_AGG", "LEAST", "GREATEST", "ABS", "SQRT", "POW", "LENGTH",
-      "UPPER", "LOWER", "REGEXP_MATCHES", "ARRAY_UNIQUE", "ARRAY_LENGTH",
-      "ARRAY_CAT", "ARRAY_APPEND", "ARRAY_PREPEND", "NOW", "MAKE_TIMESTAMP",
-      "DATE_TRUNC")
+    val functions = (Expr.aggregateNames ++ Expr.scalarNames).map(_.toUpperCase)
     keywords ++ functions ++ eng.tableNames ++
       eng.tableNames.flatMap(n => eng.tableDef(n).columns.map(_.name))
   }
@@ -232,18 +227,20 @@ object Repl {
         spark.read.text(args.inputs: _*).cache()
       }
 
-    def printSink(df: DataFrame): Unit = Repl.printRows(sink(df, args.format))
-
     def runStatements(input: String): Unit = {
       if (args.follow) runFollow(input)
-      else if (args.showRunStats) {
-        eng.executeWithStats(input, lines).foreach { case (df, stats) =>
-          printSink(df)
-          val s = stats()
-          println(f"Executed query in ${s.seconds}%.2f seconds, ingested " +
-            f"${s.bytesProcessed / 1024.0 / 1024.0}%.2f MB, processed ${s.linesProcessed} lines.")
+      else {
+        val t0 = System.nanoTime()
+        eng.execute(input, lines, stats = args.showRunStats).foreach { df =>
+          val rendered = sink(df, args.format)
+          printRows(rendered)
+          if (args.showRunStats) {
+            val s = RunStats.of(rendered.queryExecution)
+            println(f"Executed query in ${(System.nanoTime() - t0) / 1e9}%.2f seconds, ingested " +
+              f"${s.bytesProcessed / 1024.0 / 1024.0}%.2f MB, processed ${s.linesProcessed} lines.")
+          }
         }
-      } else eng.execute(input, lines).foreach(printSink)
+      }
     }
 
     /** Follow mode: run the statement over the file stream; aggregates
@@ -258,7 +255,7 @@ object Repl {
       val q = df.writeStream
         .outputMode(mode)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          printSink(batch)
+          printRows(sink(batch, args.format))
         }
         .start()
       q.awaitTermination()

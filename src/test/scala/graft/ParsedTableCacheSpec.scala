@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 
 import graft.functions.RegexCaptures
-import graft.sql.SqlEngine
+import graft.sql.{RunStats, SqlEngine}
 import graft.streaming.FollowStream
 
 /** A `sql_logs`-shaped fixture: the log and dimension tables, their
@@ -180,19 +180,25 @@ class ParsedTableCacheSpec extends SparkSpec {
     } finally lines.unpersist(blocking = true)
   }
 
-  test("queryWithStats still reports every line and byte after materialization") {
+  test("a stats SELECT scans the materialized parse and leaves it persisted") {
     val lines = logDf().cache()
     try {
       val e = engine()
       val sql = "SELECT doc FROM seqlog WHERE n > 500"
       run(e, sql, lines).collect()
-      val rows = run(e, sql, lines).collect().length
-      val (df, stats) = e.queryWithStats(sql, lines)
-      assert(df.collect().length === rows)
-      val st = stats()
+      val rows = run(e, sql, lines).collect().length // materializes the parse
+      val before = persisted
+      val withStats = e.execute(sql + ";", lines, stats = true).get
+      assert(extractions(withStats) === 0)
+      assert(withStats.collect().length === rows)
+      assert(persisted === before, "the stats query changed the persisted RDDs")
+      // over the parse, the counts are those of the lines it was built from
+      val st = RunStats.of(withStats.queryExecution)
       assert(st.linesProcessed === logLines.size)
       assert(st.bytesProcessed === logLines.map(_.getBytes(StandardCharsets.UTF_8).length).sum)
-      assert(st.rowsMatched === rows)
+      val after = run(e, sql, lines)
+      assert(extractions(after) === 0, "the query after the stats query did not scan the parse")
+      assert(after.collect().length === rows)
       e.addTables(Ddl)
     } finally lines.unpersist(blocking = true)
   }

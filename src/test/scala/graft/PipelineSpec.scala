@@ -32,25 +32,23 @@ class PipelineSpec extends SparkSpec {
     // call (the per-column arithmetic inflated the fused map-stage
     // method past the JIT compile limit). Must agree field-for-field
     // with the old formulation, including arithmetic-id extremes near
-    // fromLineitem's key-bound envelope and the maxTok cap.
+    // fromLineitem's key-bound envelope.
     val extremes = Seq(0L, 1L, 2147483647L, 2147483648L, 4294967296L,
       (268435455L * 34359738368L) + (7L * 4294967296L) + (262143L * 16384L) + 16383L)
     val ids = spark.range(0, 3000).select(col("id").as("seq_id"))
       .union(extremes.toDF("seq_id"))
-    for (cap <- Seq(TokenSequences.MaxTok, 64)) {
-      val a = TokenSequences.withSequenceColumns(ids, col("seq_id"), cap)
-        .orderBy(col("seq_id")).collect()
-      val b = PipelineReference.withSequenceColumnsDeclarative(ids, col("seq_id"), cap)
-        .orderBy(col("seq_id")).collect()
-      assert(a.length === b.length)
-      a.zip(b).foreach { case (x, y) =>
-        assert(x.getAs[String]("doc_id") === y.getAs[String]("doc_id"))
-        assert(x.getAs[Int]("n_tok") === y.getAs[Int]("n_tok"))
-        assert(x.getSeq[Int](x.fieldIndex("tokens")).toSeq ===
-          y.getSeq[Int](y.fieldIndex("tokens")).toSeq)
-        assert(x.getAs[String]("source") === y.getAs[String]("source"))
-        assert(x.getAs[Long]("__r3") === y.getAs[Long]("__r3"))
-      }
+    val a = TokenSequences.withSequenceColumns(ids, col("seq_id"))
+      .orderBy(col("seq_id")).collect()
+    val b = PipelineReference.withSequenceColumnsDeclarative(ids, col("seq_id"))
+      .orderBy(col("seq_id")).collect()
+    assert(a.length === b.length)
+    a.zip(b).foreach { case (x, y) =>
+      assert(x.getAs[String]("doc_id") === y.getAs[String]("doc_id"))
+      assert(x.getAs[Int]("n_tok") === y.getAs[Int]("n_tok"))
+      assert(x.getSeq[Int](x.fieldIndex("tokens")).toSeq ===
+        y.getSeq[Int](y.fieldIndex("tokens")).toSeq)
+      assert(x.getAs[String]("source") === y.getAs[String]("source"))
+      assert(x.getAs[Long]("__r3") === y.getAs[Long]("__r3"))
     }
   }
 

@@ -17,14 +17,12 @@ object PipelineReference {
 
   /** The pre-round-6 Column chain behind
     * [[TokenSequences.withSequenceColumns]]. */
-  def withSequenceColumnsDeclarative(df: DataFrame, seqId: Column,
-      maxTok: Int = TokenSequences.MaxTok): DataFrame = {
+  def withSequenceColumnsDeclarative(df: DataFrame, seqId: Column): DataFrame = {
     val s = ((seqId % M) * 131071L + 524287L) % M
     val r1 = lcg(s)
     val r2 = lcg(r1)
     val r3 = lcg(r2)
-    val nTok = least(lit(8) + (r1 % 45) * (r2 % 46), lit(maxTok))
-      .cast(IntegerType)
+    val nTok = (lit(8) + (r1 % 45) * (r2 % 46)).cast(IntegerType)
     val source = when(r2 % 100 < 45, lit("web"))
       .when(r2 % 100 < 62, lit("books"))
       .when(r2 % 100 < 72, lit("code"))

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.sql.{Expr, SqlEngine, Translator}
 
 /** End-to-end CLI evidence for the sink formats (SURVEY S3/S5-S7, §3.2):
   * scripted `Repl` one-shot runs (`-d DDL -c QUERY --format F FILE`) over
@@ -111,5 +112,21 @@ class ReplGoldenSpec extends SparkSpec {
     assert(split(runCli("--show-run-stats", "-c", ddlText + select, data)) ===
       (golden("select_text.golden"), Seq(nLines)))
     assert(runCli("--show-run-stats", "-c", ddlText, data) === "")
+  }
+
+  test("completion offers every function name the Translator accepts") {
+    val words = Repl.completionWords(new SqlEngine(spark)).toSet
+    assert(Set("REGEX_MATCHES", "CREATE_ARRAY").subsetOf(words))
+    val t = new Translator(spark.range(1).toDF(), Map.empty)
+    (Expr.aggregateNames ++ Expr.scalarNames).foreach { n =>
+      assert(words(n.toUpperCase), s"$n does not complete")
+      // called without arguments, an accepted name fails on them, not on the name
+      val err = try {
+        if (Expr.aggregateNames.contains(n)) t.aggregateColumn(Expr.Call(n, Nil))
+        else t.column(Expr.Call(n, Nil))
+        None
+      } catch { case e: Exception => Option(e.getMessage) }
+      assert(!err.exists(_.startsWith("unknown")), s"$n: $err")
+    }
   }
 }
