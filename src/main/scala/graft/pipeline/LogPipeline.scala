@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.core._
 import graft.parse.Extractor
+import graft.sql.Parser
 
 /** The north-rule pipeline (BASELINE.json): typed Dataset
   * parse → enrich → route → aggregate over pre-tokenized training
@@ -49,43 +50,35 @@ object LogPipeline {
 
   // ----------------------------------------------------------------- parse
 
-  private val tsGroups = "([A-Z][a-z]{2}) (\\d+) (\\d+):(\\d+):(\\d+) (\\d{4})"
-  val ingestRegex: String =
-    s"^$tsGroups (\\S+) ingest\\[(\\d+)\\]: sequence (doc-\\d+) from (\\S+) n_tok=(\\d+)$$"
-  val bulkRegex: String =
-    s"^$tsGroups (\\S+) bulk\\[(\\d+)\\]: batch (doc-\\d+) src=(\\S+) toks=(\\d+)$$"
-  val auditRegex: String = "^AUDIT\\|(doc-\\d+)\\|(\\S+)\\|(\\d+)\\|(\\w+)$"
+  /** The extraction schema as sqlgrep DDL, read by the same parser as a
+    * user's `CREATE TABLE`: three patterns in the bank, BOOLEAN
+    * group-existence columns for the matched class, timestamp composition
+    * with month names (E3). Regex backslashes are written `\\d`: the
+    * tokenizer drops the backslash of every `\x`. */
+  val tableDef: TableDef = Parser.parseTableDefs(
+    """CREATE TABLE seqlog(
+      |    p_ingest = '^([A-Z][a-z]{2}) (\\d+) (\\d+):(\\d+):(\\d+) (\\d{4}) (\\S+) ingest\\[(\\d+)\\]: sequence (doc-\\d+) from (\\S+) n_tok=(\\d+)$',
+      |    p_bulk = '^([A-Z][a-z]{2}) (\\d+) (\\d+):(\\d+):(\\d+) (\\d{4}) (\\S+) bulk\\[(\\d+)\\]: batch (doc-\\d+) src=(\\S+) toks=(\\d+)$',
+      |    p_audit = '^AUDIT\\|(doc-\\d+)\\|(\\S+)\\|(\\d+)\\|(\\w+)$',
+      |    p_ingest[0] => is_ingest BOOLEAN,
+      |    p_bulk[0] => is_bulk BOOLEAN,
+      |    p_audit[0] => is_audit BOOLEAN,
+      |    p_ingest[9] => ingest_doc TEXT,
+      |    p_bulk[9] => bulk_doc TEXT,
+      |    p_audit[1] => audit_doc TEXT,
+      |    p_ingest[10] => ingest_src TEXT,
+      |    p_bulk[10] => bulk_src TEXT,
+      |    p_audit[2] => audit_src TEXT,
+      |    p_ingest[11] => ingest_n INT,
+      |    p_bulk[11] => bulk_n INT,
+      |    p_audit[3] => audit_n INT,
+      |    p_ingest[6], p_ingest[1], p_ingest[2], p_ingest[3], p_ingest[4], p_ingest[5] => ts TIMESTAMP,
+      |    p_bulk[6], p_bulk[1], p_bulk[2], p_bulk[3], p_bulk[4], p_bulk[5] => bulk_ts TIMESTAMP
+      |)""".stripMargin).head
 
-  private def gi(i: Int) = ColumnSource.Group("p_ingest", i)
-  private def gb(i: Int) = ColumnSource.Group("p_bulk", i)
-  private def ga(i: Int) = ColumnSource.Group("p_audit", i)
-
-  /** The extraction schema, exactly the reference's CREATE TABLE shape:
-    * three patterns in the bank, BOOLEAN group-existence columns for the
-    * matched class, timestamp composition with month names (E3). */
-  val tableDef: TableDef = TableDef("seqlog",
-    patterns = Seq(
-      PatternDef("p_ingest", ingestRegex),
-      PatternDef("p_bulk", bulkRegex),
-      PatternDef("p_audit", auditRegex)),
-    columns = Seq(
-      ColumnDef("is_ingest", ValueType.BoolT, gi(0)),
-      ColumnDef("is_bulk", ValueType.BoolT, gb(0)),
-      ColumnDef("is_audit", ValueType.BoolT, ga(0)),
-      ColumnDef("ingest_doc", ValueType.TextT, gi(9)),
-      ColumnDef("bulk_doc", ValueType.TextT, gb(9)),
-      ColumnDef("audit_doc", ValueType.TextT, ga(1)),
-      ColumnDef("ingest_src", ValueType.TextT, gi(10)),
-      ColumnDef("bulk_src", ValueType.TextT, gb(10)),
-      ColumnDef("audit_src", ValueType.TextT, ga(2)),
-      ColumnDef("ingest_n", ValueType.IntT, gi(11)),
-      ColumnDef("bulk_n", ValueType.IntT, gb(11)),
-      ColumnDef("audit_n", ValueType.IntT, ga(3)),
-      // event time composed from (year, monthname, day, h, m, s)
-      ColumnDef("ts", ValueType.TimestampT, ColumnSource.TimestampGroups(
-        Seq(gi(6), gi(1), gi(2), gi(3), gi(4), gi(5)))),
-      ColumnDef("bulk_ts", ValueType.TimestampT, ColumnSource.TimestampGroups(
-        Seq(gb(6), gb(1), gb(2), gb(3), gb(4), gb(5))))))
+  val ingestRegex: String = tableDef.pattern("p_ingest").regex
+  val bulkRegex: String = tableDef.pattern("p_bulk").regex
+  val auditRegex: String = tableDef.pattern("p_audit").regex
 
   /** Parse rendered lines into the typed relation + routing key.
     * `carry` columns (e.g. the token payload) ride alongside. */
@@ -109,21 +102,18 @@ object LogPipeline {
     * deliberately absent (`src13`) to exercise the left-outer NULL path
     * (reference `src/execution/join.rs:124-139`), and one dim row has no
     * facts (`imagenet`). */
+  private val sourceDimRows: Seq[(String, String, Int)] =
+    Seq(("web", "na", 10), ("books", "eu", 7), ("code", "na", 9), ("imagenet", "ap", 1)) ++
+      (0 until 17).filter(_ != 13).map(i => (s"src$i", Seq("na", "eu", "ap")(i % 3), i))
+
   def sourceDim(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val rows = Seq(
-      ("web", "na", 10), ("books", "eu", 7), ("code", "na", 9),
-      ("imagenet", "ap", 1)) ++
-      (0 until 17).filter(_ != 13).map(i => (s"src$i", Seq("na", "eu", "ap")(i % 3), i))
-    rows.toDF("source", "region", "weight")
+    sourceDimRows.toDF("source", "region", "weight")
   }
 
   /** DuckDB VALUES-list replica of [[sourceDim]] for oracle SQL. */
   val sourceDimSql: String = {
-    val rows = (Seq(("web", "na", 10), ("books", "eu", 7), ("code", "na", 9),
-      ("imagenet", "ap", 1)) ++
-      (0 until 17).filter(_ != 13).map(i => (s"src$i", Seq("na", "eu", "ap")(i % 3), i)))
-      .map { case (s, r, w) => s"('$s','$r',$w)" }.mkString(", ")
+    val rows = sourceDimRows.map { case (s, r, w) => s"('$s','$r',$w)" }.mkString(", ")
     s"source_dim(source, region, weight) AS (SELECT * FROM (VALUES $rows))"
   }
 

@@ -9,17 +9,17 @@ import graft.table.{Manifest, ManifestTable, SinkLineage}
   * ONE pass over the input (the fan-out is a `partitionBy("sink")` write,
   * not N filtered re-reads — at 10^12 sequences re-scanning per sink is
   * the difference between 1x and sink-count x IO), followed by per-sink
-  * lineage/metrics fragments and an atomic snapshot commit.
+  * lineage counted from the parquet footers and an atomic snapshot commit.
   *
   * Resume semantics (north rule: "resumable from checkpoint with
-  * per-partition lineage + metrics"):
-  *  - committed snapshot        → no-op, returns the manifest;
-  *  - crash mid-data-write      → data rewritten (idempotent overwrite);
-  *  - crash after data, before commit → data reused, only the cheap
-  *    per-sink counting/lineage step re-runs (per-sink fragments are
-  *    themselves idempotent);
-  *  - crash between fragments and commit → fragments reused, pointer flip
-  *    re-runs.
+  * per-partition lineage + metrics"); the `_current` flip is the commit:
+  *  - committed snapshot (`_current` or its ancestor) → no-op, returns
+  *    the manifest;
+  *  - crash mid-data-write → data rewritten (idempotent overwrite);
+  *  - crash after the `_data_done` marker, before the flip → data reused;
+  *    the per-sink counts are re-read from the footers, the manifest is
+  *    (re)written with the current pointer as parent, and the pointer
+  *    flips.
   */
 object PipelineJob {
 
@@ -30,9 +30,11 @@ object PipelineJob {
   private val DataDone = "_data_done"
 
   def run(spark: SparkSession, seqs: DataFrame, tableRoot: String,
+      snapshotId: Long, partitions: Int): Manifest =
+    run(spark, seqs, new ManifestTable(tableRoot), snapshotId, partitions)
+
+  private[graft] def run(spark: SparkSession, seqs: DataFrame, table: ManifestTable,
       snapshotId: Long, partitions: Int): Manifest = {
-    val table = new ManifestTable(tableRoot)
-    // already committed? -> resume is a no-op
     if (table.isCommitted(snapshotId)) return table.manifest(snapshotId)
 
     if (table.marker(snapshotId, DataDone).isEmpty) {
@@ -49,7 +51,7 @@ object PipelineJob {
       val obs = Observation(s"pipeline-$snapshotId")
       val observed = routed.observe(obs,
         count(lit(1)).as("rows_routed"),
-        sum(col("n_tok")).as("tokens_routed"))
+        coalesce(sum(col("n_tok")), lit(0L)).as("tokens_routed"))
       observed.write.mode("overwrite")
         .partitionBy("sink")
         .parquet(table.dataDir(snapshotId).toString)
@@ -60,13 +62,8 @@ object PipelineJob {
           s""""tokens_routed":${m("tokens_routed")}}""")
     }
 
-    // per-sink lineage fragments (idempotent; parquet-footer counts only)
-    val done = table.completedSinks(snapshotId)
-    table.dataSinks(snapshotId).foreach { case (sink, path) =>
-      if (!done.contains(sink))
-        table.addFragment(snapshotId, SinkLineage(sink, spark.read.parquet(path).count(), path))
-    }
-    table.commit(snapshotId)
+    table.commit(snapshotId, table.dataSinks(snapshotId).map { case (sink, path) =>
+      SinkLineage(sink, spark.read.parquet(path).count(), path) })
   }
 
   def metrics(tableRoot: String, snapshotId: Long): Option[RunMetrics] =

@@ -1,6 +1,5 @@
 package graft.table
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,17 +15,19 @@ import scala.jdk.CollectionConverters._
   * Layout (this class is its only owner):
   * {{{
   *   <root>/data/snap=<id>/sink=<sink>/part-*.parquet — immutable data files
-  *   <root>/_pending/<id>/<sink>.json                 — per-sink lineage fragment
   *   <root>/_pending/<id>/<marker>                    — in-progress markers
   *   <root>/_manifests/<id>.json                      — snapshot manifest
   *   <root>/_current                                  — pointer (atomic rename)
   * }}}
   *
   * Commit protocol (crash-safe): data files are fully written under a
-  * snapshot-scoped directory first; per-sink fragments next; the
-  * manifest after them; the `_current` pointer is the last, atomic step.
-  * A crash before the pointer flip leaves the previous snapshot intact
-  * and readable. Every file but the data is written by atomic rename.
+  * snapshot-scoped directory first; the manifest next; the `_current`
+  * pointer last. The pointer flip is the one commit point: a snapshot is
+  * committed when it is `_current` or an ancestor of it by `parentId`. A
+  * manifest written but never flipped is not committed, and
+  * [[commit]] rewrites it with the pointer it then finds as parent. A
+  * crash before the flip leaves the previous snapshot intact and
+  * readable. Every file but the data is written by atomic rename.
   */
 final case class SinkLineage(sink: String, rows: Long, path: String)
 
@@ -64,64 +65,41 @@ class ManifestTable(root: String) {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
   private def manifestPath(snapshotId: Long): Path = p("_manifests", s"$snapshotId.json")
   private def pending(snapshotId: Long, name: String): Path = p("_pending", s"$snapshotId", name)
+  private def readFile(path: Path): Option[String] =
+    if (Files.exists(path)) Some(Files.readString(path)) else None
 
-  def currentSnapshotId: Option[Long] = {
-    val cur = p("_current")
-    if (Files.exists(cur)) Some(new String(Files.readAllBytes(cur), StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  def currentSnapshotId: Option[Long] = readFile(p("_current")).map(_.trim.toLong)
 
   def manifest(snapshotId: Long): Manifest =
-    Manifest.fromJson(new String(
-      Files.readAllBytes(manifestPath(snapshotId)), StandardCharsets.UTF_8))
+    Manifest.fromJson(Files.readString(manifestPath(snapshotId)))
 
-  /** True once `commit(snapshotId)` has written the snapshot's manifest. */
-  def isCommitted(snapshotId: Long): Boolean = Files.exists(manifestPath(snapshotId))
+  /** True when the snapshot is `_current` or an ancestor of it. */
+  def isCommitted(snapshotId: Long): Boolean =
+    Iterator.iterate(currentSnapshotId)(_.flatMap(manifest(_).parentId))
+      .takeWhile(_.isDefined).contains(Some(snapshotId))
 
   /** Where a snapshot's data files go: one `sink=<name>` directory per
     * sink, as a `partitionBy("sink")` write lays them out. */
   def dataDir(snapshotId: Long): Path = p("data", s"snap=$snapshotId")
 
-  /** The sinks written under [[dataDir]], by name, with their paths. */
+  /** The sinks written under [[dataDir]], by name, with their paths (a
+    * zero-row write leaves the directory with no `sink=` entries). */
   def dataSinks(snapshotId: Long): Seq[(String, String)] =
     Files.list(dataDir(snapshotId)).iterator().asScala.toSeq
       .collect { case d if d.getFileName.toString.startsWith("sink=") =>
         d.getFileName.toString.stripPrefix("sink=") -> d.toString }
       .sorted
 
-  /** Sinks already committed in an *in-progress* snapshot (manifest
-    * fragments under `_pending/<id>/`) — the resume unit. */
-  def completedSinks(snapshotId: Long): Map[String, SinkLineage] = {
-    val dir = p("_pending", s"$snapshotId")
-    if (!Files.exists(dir)) Map.empty
-    else Files.list(dir).iterator().asScala
-      .filter(_.toString.endsWith(".json"))
-      .map(f => Manifest.fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
-      .flatMap(_.sinks).map(l => l.sink -> l).toMap
-  }
-
-  /** Record one sink of an in-progress snapshot; [[commit]] collects it. */
-  def addFragment(snapshotId: Long, lineage: SinkLineage): Unit =
-    atomicWrite(pending(snapshotId, s"${lineage.sink}.json"),
-      Manifest(snapshotId, None, Seq(lineage)).toJson)
-
   /** A named marker of an in-progress snapshot, if written. */
-  def marker(snapshotId: Long, name: String): Option[String] = {
-    val f = pending(snapshotId, name)
-    if (Files.exists(f)) Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-    else None
-  }
+  def marker(snapshotId: Long, name: String): Option[String] = readFile(pending(snapshotId, name))
 
-  /** `name` must not end in `.json`: [[completedSinks]] reads those as
-    * fragments. */
   def writeMarker(snapshotId: Long, name: String, content: String): Unit =
     atomicWrite(pending(snapshotId, name), content)
 
-  /** Seal a snapshot: collect fragments into one manifest, flip the
-    * `_current` pointer atomically. */
-  def commit(snapshotId: Long): Manifest = {
-    val parent = currentSnapshotId
-    val m = Manifest(snapshotId, parent, completedSinks(snapshotId).values.toSeq.sortBy(_.sink))
+  /** Seal a snapshot: (re)write its manifest with the current pointer as
+    * parent, then flip `_current` atomically — the commit point. */
+  def commit(snapshotId: Long, sinks: Seq[SinkLineage]): Manifest = {
+    val m = Manifest(snapshotId, currentSnapshotId, sinks.sortBy(_.sink))
     atomicWrite(manifestPath(snapshotId), m.toJson)
     atomicWrite(p("_current"), snapshotId.toString)
     m
@@ -136,10 +114,11 @@ class ManifestTable(root: String) {
     spark.read.parquet(lineage.path)
   }
 
-  private def atomicWrite(path: Path, content: String): Unit = {
+  /** Every durable write but the data files goes through here. */
+  protected def atomicWrite(path: Path, content: String): Unit = {
     Files.createDirectories(path.getParent)
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.writeString(tmp, content)
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }

@@ -80,6 +80,43 @@ class PipelineSpec extends SparkSpec {
     assert(got === expected)
   }
 
+  test("LogPipeline.tableDef read from DDL equals the hand-built TableDef it replaced") {
+    import graft.core.{ColumnDef, ColumnSource, PatternDef, TableDef, ValueType}
+    def g(pattern: String, i: Int) = ColumnSource.Group(pattern, i)
+    val ts = "([A-Z][a-z]{2}) (\\d+) (\\d+):(\\d+):(\\d+) (\\d{4})"
+    val old = TableDef("seqlog",
+      patterns = Seq(
+        PatternDef("p_ingest",
+          s"^$ts (\\S+) ingest\\[(\\d+)\\]: sequence (doc-\\d+) from (\\S+) n_tok=(\\d+)$$"),
+        PatternDef("p_bulk",
+          s"^$ts (\\S+) bulk\\[(\\d+)\\]: batch (doc-\\d+) src=(\\S+) toks=(\\d+)$$"),
+        PatternDef("p_audit", "^AUDIT\\|(doc-\\d+)\\|(\\S+)\\|(\\d+)\\|(\\w+)$")),
+      columns = Seq(
+        ColumnDef("is_ingest", ValueType.BoolT, g("p_ingest", 0)),
+        ColumnDef("is_bulk", ValueType.BoolT, g("p_bulk", 0)),
+        ColumnDef("is_audit", ValueType.BoolT, g("p_audit", 0)),
+        ColumnDef("ingest_doc", ValueType.TextT, g("p_ingest", 9)),
+        ColumnDef("bulk_doc", ValueType.TextT, g("p_bulk", 9)),
+        ColumnDef("audit_doc", ValueType.TextT, g("p_audit", 1)),
+        ColumnDef("ingest_src", ValueType.TextT, g("p_ingest", 10)),
+        ColumnDef("bulk_src", ValueType.TextT, g("p_bulk", 10)),
+        ColumnDef("audit_src", ValueType.TextT, g("p_audit", 2)),
+        ColumnDef("ingest_n", ValueType.IntT, g("p_ingest", 11)),
+        ColumnDef("bulk_n", ValueType.IntT, g("p_bulk", 11)),
+        ColumnDef("audit_n", ValueType.IntT, g("p_audit", 3)),
+        ColumnDef("ts", ValueType.TimestampT, ColumnSource.TimestampGroups(
+          Seq(6, 1, 2, 3, 4, 5).map(g("p_ingest", _)))),
+        ColumnDef("bulk_ts", ValueType.TimestampT, ColumnSource.TimestampGroups(
+          Seq(6, 1, 2, 3, 4, 5).map(g("p_bulk", _))))))
+    val got = LogPipeline.tableDef
+    assert(got.name === old.name)
+    assert(got.patterns.length === old.patterns.length)
+    got.patterns.zip(old.patterns).foreach { case (a, b) => assert(a === b, a.name) }
+    assert(got.columns.length === old.columns.length)
+    got.columns.zip(old.columns).foreach { case (a, b) => assert(a === b, a.name) }
+    assert(got === old)
+  }
+
   test("enrich is a broadcast left-outer join; unknown source keeps NULL region") {
     val parsed = LogPipeline.parse(
       LogPipeline.renderLines(seqs).select(col("line")))
