@@ -9,37 +9,45 @@ import org.apache.spark.sql.types._
   * Reference type system: `ValueType` (reference `src/model.rs:356-364`) —
   * INT (i64), REAL (f64), BOOLEAN, TEXT, TIMESTAMP, INTERVAL, and nested
   * arrays `t[]` (`src/model.rs:396-411`). No decimal/map/struct/date.
+  * [[ValueType.NullT]] is the type of the NULL literal only.
   */
-sealed trait ValueType { def spark: DataType }
+sealed trait ValueType { def spark: DataType; def name: String }
 object ValueType {
-  case object IntT extends ValueType { val spark: DataType = LongType }
-  case object RealT extends ValueType { val spark: DataType = DoubleType }
-  case object BoolT extends ValueType { val spark: DataType = BooleanType }
-  case object TextT extends ValueType { val spark: DataType = StringType }
-  case object TimestampT extends ValueType { val spark: DataType = TimestampType }
+  case object IntT extends ValueType { val spark: DataType = LongType; val name = "int" }
+  case object RealT extends ValueType { val spark: DataType = DoubleType; val name = "real" }
+  case object BoolT extends ValueType { val spark: DataType = BooleanType; val name = "boolean" }
+  case object TextT extends ValueType { val spark: DataType = StringType; val name = "text" }
+  case object TimestampT extends ValueType {
+    val spark: DataType = TimestampType; val name = "timestamp"
+  }
   /** Stored as microseconds (LongType) internally; the reference prints
     * intervals as `HH:MM:SS.mmm` (`src/model.rs:345-350`) — see
     * [[NullSemantics.formatInterval]]. */
-  case object IntervalT extends ValueType { val spark: DataType = LongType }
+  case object IntervalT extends ValueType { val spark: DataType = LongType; val name = "interval" }
   final case class ArrayT(elem: ValueType) extends ValueType {
     def spark: DataType = ArrayType(elem.spark, containsNull = true)
+    def name: String = elem.name + "[]"
   }
+  /** The NULL literal's type: the bottom of the widening order, never
+    * declared by a column or a cast. */
+  case object NullT extends ValueType { val spark: DataType = NullType; val name = "null" }
 
   /** Parse a type name as the reference DDL does (`src/model.rs:367-394`),
     * including nested array suffixes (`real[][]`). */
   def parse(s: String): ValueType = {
     val t = s.trim
     if (t.endsWith("[]")) ArrayT(parse(t.dropRight(2)))
-    else t.toLowerCase match {
-      case "int"       => IntT
-      case "real"      => RealT
-      case "boolean"   => BoolT
-      case "text"      => TextT
-      case "timestamp" => TimestampT
-      case "interval"  => IntervalT
-      case other       => throw new IllegalArgumentException(s"unknown type: $other")
-    }
+    else Seq(IntT, RealT, BoolT, TextT, TimestampT, IntervalT).find(_.name == t.toLowerCase)
+      .getOrElse(throw new IllegalArgumentException(s"unknown type: ${t.toLowerCase}"))
   }
+
+  /** Spark column metadata that marks an output column as INTERVAL, which
+    * Spark sees as LongType micros; the text and CSV sinks print tagged
+    * columns as `HH:MM:SS.mmm`. */
+  private val Key = "sqlgrep_type"
+  val IntervalTag: Metadata = new MetadataBuilder().putString(Key, IntervalT.name).build()
+  def tagged(f: StructField): Boolean =
+    f.metadata.contains(Key) && f.metadata.getString(Key) == IntervalT.name
 }
 
 /** Null-semantics and display-format parity helpers.

@@ -144,7 +144,7 @@ object Extractor {
       // reference accepts '%Y-%m-%d %H:%M:%S' (src/model.rs:378-384)
       try_to_timestamp(s, lit("yyyy-MM-dd HH:mm:ss"))
     case ValueType.IntervalT => graft.functions.SqlgrepFunctions.parseInterval(s)
-    case ValueType.ArrayT(_) => throw new IllegalArgumentException(
+    case ValueType.ArrayT(_) | ValueType.NullT => throw new IllegalArgumentException(
       "nested array string-parse not supported; use JSON source")
   }
 

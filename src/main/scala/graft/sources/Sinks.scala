@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.{NullSemantics, ValueType}
+
 /** Output sinks with the reference CLI's formats
   * (`OutputPrinter::print`, reference `src/executor.rs:255-309`).
   * Each returns a single-string-column DataFrame (distributed render —
@@ -14,10 +16,11 @@ import org.apache.spark.sql.types._
   * Value rendering follows `Value::Display` (reference
   * `src/model.rs:335-353`) exactly: NULL prints `NULL`, floats `{:.2}`,
   * strings `'single-quoted'`, arrays `{e1, e2}` with elements rendered
-  * recursively, timestamps `%Y-%m-%d %H:%M:%S.%3f`. Intervals reach the
-  * sinks as pre-formatted strings (the SQL layer renders them via
-  * [[graft.core.NullSemantics.formatInterval]] — a bare LongType here is
-  * indistinguishable from INT by design).
+  * recursively, timestamps `%Y-%m-%d %H:%M:%S.%3f`. An INTERVAL is
+  * LongType micros to Spark: the text and CSV sinks print a column that
+  * the SQL layer tagged with [[graft.core.ValueType.IntervalTag]] as
+  * `HH:MM:SS.mmm` ([[graft.core.NullSemantics.formatInterval]]); the
+  * JSON sink prints its micros.
   */
 object Sinks {
 
@@ -41,8 +44,11 @@ object Sinks {
     case _ => c.cast(StringType) // int, bool print as-is
   }
 
-  private def rendered(df: DataFrame)(f: StructField): Column =
-    coalesce(display(col(f.name), f.dataType), lit("NULL"))
+  private def rendered(f: StructField): Column = {
+    val c = col(f.name)
+    coalesce(if (ValueType.tagged(f)) when(c.isNotNull, NullSemantics.formatInterval(c))
+      else display(c, f.dataType), lit("NULL"))
+  }
 
   /** S5 — text sink: `name: value, name: value` per row; a bare `input`
     * projection prints the raw line (reference `src/executor.rs:258-270`). */
@@ -51,7 +57,7 @@ object Sinks {
     val out =
       if (cols.map(_.name) == Seq("input")) col("input")
       else concat_ws(", ", cols.map(f =>
-        format_string(s"${f.name}: %s", rendered(df)(f))): _*)
+        format_string(s"${f.name}: %s", rendered(f))): _*)
     df.select(out.as("value"))
   }
 
@@ -83,7 +89,7 @@ object Sinks {
     import spark.implicits._
     val header = Seq(df.columns.mkString(";")).toDF("value")
     val rows = df.select(concat_ws(";",
-      df.schema.fields.toSeq.map(rendered(df)): _*).as("value"))
+      df.schema.fields.toSeq.map(rendered): _*).as("value"))
     header.union(rows)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.TableDef
+import graft.core.{TableDef, ValueType}
 
 /** AST for the reference's SQL dialect (grammar:
   * reference `src/parsing/parser.rs:216-610`; semantics
@@ -18,7 +18,7 @@ object Expr {
   /** 1-based array index (reference P9). */
   final case class Index(arr: Expr, idx: Expr) extends Expr
   /** `expr::type` (reference P10). */
-  final case class Cast(e: Expr, tpe: String) extends Expr
+  final case class Cast(e: Expr, tpe: ValueType) extends Expr
   final case class Call(name: String, args: Seq[Expr], distinct: Boolean = false) extends Expr
   final case class CaseWhen(clauses: Seq[(Expr, Expr)], otherwise: Expr) extends Expr
   final case class ArrayLit(items: Seq[Expr]) extends Expr
@@ -26,21 +26,33 @@ object Expr {
   final case class Extract(part: String, from: Expr) extends Expr
   case object Wildcard extends Expr
 
-  /** Direct subexpressions of `e`, left to right. */
-  def children(e: Expr): Seq[Expr] = e match {
-    case Bin(_, l, r) => Seq(l, r)
-    case Neg(x) => Seq(x)
-    case Not(x) => Seq(x)
-    case Is(l, r, _) => Seq(l, r)
-    case In(x, list, _) => x +: list
-    case Index(a, i) => Seq(a, i)
-    case Cast(x, _) => Seq(x)
-    case Call(_, args, _) => args
-    case CaseWhen(cs, o) => cs.flatMap { case (c, v) => Seq(c, v) } :+ o
-    case ArrayLit(items) => items
-    case Extract(_, x) => Seq(x)
-    case _: Lit | _: ColRef | Wildcard => Nil
+  /** `e` with `f` applied to each direct subexpression, left to right:
+    * the one place that lists every node's children. */
+  def mapChildren(e: Expr)(f: Expr => Expr): Expr = e match {
+    case Bin(op, l, r) => Bin(op, f(l), f(r))
+    case Neg(x) => Neg(f(x))
+    case Not(x) => Not(f(x))
+    case Is(l, r, n) => Is(f(l), f(r), n)
+    case In(x, list, n) => In(f(x), list.map(f), n)
+    case Index(a, i) => Index(f(a), f(i))
+    case Cast(x, t) => Cast(f(x), t)
+    case Call(n, args, d) => Call(n, args.map(f), d)
+    case CaseWhen(cs, o) => CaseWhen(cs.map { case (c, v) => (f(c), f(v)) }, f(o))
+    case ArrayLit(items) => ArrayLit(items.map(f))
+    case Extract(p, x) => Extract(p, f(x))
+    case _: Lit | _: ColRef | Wildcard => e
   }
+
+  /** Direct subexpressions of `e`, left to right. */
+  def children(e: Expr): Seq[Expr] = {
+    val out = Seq.newBuilder[Expr]; mapChildren(e) { c => out += c; c }; out.result()
+  }
+
+  /** `e` with `f` applied top-down: a subtree `f` is defined at is
+    * replaced whole, any other node is rebuilt from its transformed
+    * children. */
+  def transform(e: Expr)(f: PartialFunction[Expr, Expr]): Expr =
+    f.applyOrElse(e, mapChildren(_: Expr)(transform(_)(f)))
 
   /** True when `p` holds for `e` or any expression nested in it. */
   def exists(e: Expr)(p: Expr => Boolean): Boolean =

@@ -25,10 +25,8 @@ final class Parser(tokens: Vector[Tok]) {
 
   def parseStatements(): Statement = {
     val stmts = Vector.newBuilder[Statement]
-    var count = 0
     while (cur != Tok.End) {
       stmts += parseStatement()
-      count += 1
       while (cur == Tok.Semi) advance()
     }
     val all = stmts.result()
@@ -141,7 +139,7 @@ final class Parser(tokens: Vector[Tok]) {
       ColumnSource.Group(pname, g)
     }
 
-    def parseTypeName(): String = {
+    def parseType(): ValueType = {
       val base = advance() match {
         case Tok.Ident(s) => s
         case Tok.Kw(s) => s // TIMESTAMP etc. are not keywords here, but be lenient
@@ -151,7 +149,7 @@ final class Parser(tokens: Vector[Tok]) {
       while (cur == Tok.LBracket && tokens(pos + 1) == Tok.RBracket) {
         advance(); advance(); sb.append("[]")
       }
-      sb.toString
+      ValueType.parse(sb.toString)
     }
 
     def parseModifiers(c: ColumnDef): ColumnDef = {
@@ -182,8 +180,7 @@ final class Parser(tokens: Vector[Tok]) {
     def parseColumnTail(refs: Seq[ColumnSource.Group]): Unit = {
       expect(Tok.Arrow)
       val colName = ident()
-      val tpeName = parseTypeName()
-      val tpe = ValueType.parse(tpeName)
+      val tpe = parseType()
       val source: ColumnSource =
         if (refs.length == 1) refs.head
         else tpe match {
@@ -219,7 +216,7 @@ final class Parser(tokens: Vector[Tok]) {
           expect(Tok.RBrace)
           expect(Tok.Arrow)
           val colName = ident()
-          val tpe = ValueType.parse(parseTypeName())
+          val tpe = parseType()
           columns += parseModifiers(ColumnDef(colName, tpe, ColumnSource.Json(sb.toString)))
 
         // '<regex>' => col TYPE  (inline pattern bound to group 1)
@@ -284,11 +281,7 @@ final class Parser(tokens: Vector[Tok]) {
       else cur match {
         case Tok.DoubleColon =>
           advance()
-          val t = advance() match {
-            case Tok.Ident(s) => s
-            case other => throw new IllegalArgumentException(s"expected type after ::, got $other")
-          }
-          lhs = Expr.Cast(lhs, t)
+          lhs = Expr.Cast(lhs, ValueType.parse(ident()))
         case Tok.LBracket =>
           advance()
           val idx = parseExpr()

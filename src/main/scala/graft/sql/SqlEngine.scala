@@ -49,6 +49,10 @@ object RunStats {
   * first query, uncached or streaming input, `::'file'` sources and the
   * join side run the extraction as before.
   *
+  * A [[Translator]] types each SELECT's expressions from the declared
+  * column types. An INTERVAL output stays LongType micros and carries
+  * [[ValueType.IntervalTag]] for the text and CSV sinks.
+  *
   * `execute(..., stats = true)` is the `--show-run-stats` surface: the
   * SELECT runs the same plan, and [[RunStats.of]] reads its line and
   * byte counts from the query execution that ran it. A materialized
@@ -88,6 +92,11 @@ final class SqlEngine(spark: SparkSession) {
   /** Run a query. `lines` backs the FROM table; `joinLines` backs the
     * joined table (defaults to reading the join clause's `::'file'`). */
   def query(sql: String, lines: DataFrame, joinLines: Option[DataFrame] = None): DataFrame =
+    typedQuery(sql, lines, joinLines)._1
+
+  /** [[query]] with the sqlgrep type of each output column. */
+  private[graft] def typedQuery(sql: String, lines: DataFrame,
+      joinLines: Option[DataFrame] = None): (DataFrame, Seq[ValueType]) =
     runSelect(Parser.parseQuery(sql), lines, joinLines, stats = false)
 
   /** Execute a possibly MULTI-statement input (reference
@@ -105,28 +114,25 @@ final class SqlEngine(spark: SparkSession) {
     }
     flatten(Parser.parse(input)).foldLeft(Option.empty[DataFrame]) {
       case (out, Statement.CreateTable(td)) => define(td); out
-      case (_, Statement.Select(sel)) => Some(runSelect(sel, lines, joinLines, stats))
+      case (_, Statement.Select(sel)) => Some(runSelect(sel, lines, joinLines, stats)._1)
       case (out, Statement.Multiple(_)) => out // unreachable after flatten
     }
   }
 
+  /** The SELECT's rows and the sqlgrep type of each output column. */
   private def runSelect(stmt: SelectStmt, lines: DataFrame,
-      joinLines: Option[DataFrame], stats: Boolean): DataFrame = {
+      joinLines: Option[DataFrame], stats: Boolean): (DataFrame, Seq[ValueType]) = {
     val td = tableDef(stmt.from)
     val parsed = stmt.fromFile match {
       case Some(f) => extract(td, spark.read.text(f), stats)
       case None => fromTable(td, lines, readsInput(stmt), stats)
     }
 
-    // scope: bare + qualified names for the FROM table, plus `input`;
-    // the parallel ValueType map lets the Translator see INTERVAL (which
-    // is indistinguishable from INT at the Spark-type level)
-    var scope: Map[String, Column] = td.columns.map(c => c.name -> col(c.name)).toMap ++
-      td.columns.map(c => s"${td.name}.${c.name}" -> col(c.name)).toMap +
-      ("input" -> col("input"))
-    var typeScope: Map[String, ValueType] = td.columns.map(c => c.name -> c.tpe).toMap ++
-      td.columns.map(c => s"${td.name}.${c.name}" -> c.tpe).toMap +
-      ("input" -> ValueType.TextT)
+    // scope: bare + qualified names for the FROM table, plus `input`,
+    // each typed by its declared column type
+    var scope: Map[String, Typed] = td.columns.flatMap { c =>
+      val t = Typed(col(c.name), c.tpe); Seq(c.name -> t, s"${td.name}.${c.name}" -> t)
+    }.toMap + ("input" -> Typed(col("input"), ValueType.TextT))
     var projOrder: Seq[String] = td.columns.map(_.name)
 
     val isAggregate = stmt.groupBy.isDefined ||
@@ -168,25 +174,24 @@ final class SqlEngine(spark: SparkSession) {
           parsed(fromCol) === jParsed(s"__j_$joinCol"), joinType)
         // joined columns: always qualified; bare when not clashing (J4)
         jtd.columns.foreach { c =>
-          scope += (s"${jtd.name}.${c.name}" -> col(s"__j_${c.name}"))
-          typeScope += (s"${jtd.name}.${c.name}" -> c.tpe)
+          val t = Typed(col(s"__j_${c.name}"), c.tpe)
+          scope += (s"${jtd.name}.${c.name}" -> t)
           if (!scope.contains(c.name)) {
-            scope += (c.name -> col(s"__j_${c.name}"))
-            typeScope += (c.name -> c.tpe)
+            scope += (c.name -> t)
             projOrder :+= c.name
           }
         }
         out
     }
 
-    val trans = new Translator(joined, scope, typeScope)
+    val trans = new Translator(scope)
     val filtered = stmt.where match {
-      case Some(w) => joined.filter(graft.core.NullSemantics.boolOf(trans.column(w)))
+      case Some(w) => joined.filter(NullSemantics.boolOf(trans.column(w).col))
       case None => joined
     }
 
     if (!isAggregate) runSimple(stmt, filtered, trans, projOrder)
-    else runAggregate(stmt, filtered, trans, scope)
+    else runAggregate(stmt, filtered, trans)
   }
 
   /** The FROM table's rows over `lines`. The first query over a cached
@@ -230,15 +235,19 @@ final class SqlEngine(spark: SparkSession) {
   // ---------------------------------------------------------- simple path
 
   private def runSimple(stmt: SelectStmt, df: DataFrame, trans: Translator,
-      projOrder: Seq[String]): DataFrame = {
+      projOrder: Seq[String]): (DataFrame, Seq[ValueType]) = {
     val cols = stmt.projections.zipWithIndex.flatMap {
-      case ((_, Expr.Wildcard), _) => projOrder.map(n => trans.column(Expr.ColRef(n)).as(n))
-      case ((alias, e), i) => Seq(trans.column(e).as(alias.getOrElse(defaultName(e, i))))
+      case ((_, Expr.Wildcard), _) => projOrder.map(n => n -> trans.column(Expr.ColRef(n)))
+      case ((alias, e), i) => Seq(alias.getOrElse(defaultName(e, i)) -> trans.column(e))
     }
-    val selected = df.select(cols: _*)
+    val selected = df.select(cols.map(output): _*)
     val distincted = if (stmt.distinct) selected.distinct() else selected
-    stmt.limit.map(distincted.limit).getOrElse(distincted)
+    (stmt.limit.map(distincted.limit).getOrElse(distincted), cols.map(_._2.tpe))
   }
+
+  /** `t` as output column `name`; an INTERVAL carries [[ValueType.IntervalTag]]. */
+  private def output(named: (String, Typed)): Column = named match { case (name, Typed(c, t)) =>
+    if (t == ValueType.IntervalT) c.as(name, ValueType.IntervalTag) else c.as(name) }
 
   private def defaultName(e: Expr, i: Int): String = e match {
     case Expr.ColRef(n, _) => n // parser_tree_converter.rs:117-122
@@ -248,8 +257,8 @@ final class SqlEngine(spark: SparkSession) {
 
   // ------------------------------------------------------- aggregate path
 
-  private def runAggregate(stmt: SelectStmt, df: DataFrame, trans: Translator,
-      scope: Map[String, Column]): DataFrame = {
+  private def runAggregate(stmt: SelectStmt, df: DataFrame,
+      trans: Translator): (DataFrame, Seq[ValueType]) = {
     val groupKeys: Seq[Expr] = stmt.groupBy.getOrElse(Nil)
     val keyAlias: Map[Expr, String] = groupKeys.zipWithIndex
       .map { case (k, i) => k -> s"__key_$i" }.toMap
@@ -269,10 +278,10 @@ final class SqlEngine(spark: SparkSession) {
     stmt.having.foreach(registerAggs)
 
     // pre-project group keys, then hash-aggregate
-    val withKeys = keyAlias.foldLeft(df) { case (d, (k, a)) =>
-      d.withColumn(a, trans.column(k))
-    }
-    val aggCols = aggAlias.map { case (call, a) => trans.aggregateColumn(call).as(a) }.toSeq
+    val keyTyped = keyAlias.map { case (k, a) => a -> trans.column(k) }
+    val aggTyped = aggAlias.map { case (call, a) => a -> trans.aggregateColumn(call) }
+    val withKeys = keyAlias.foldLeft(df) { case (d, (_, a)) => d.withColumn(a, keyTyped(a).col) }
+    val aggCols = aggTyped.map { case (a, t) => t.col.as(a) }.toSeq
     // GROUP BY with no aggregate in any projection is legal in the
     // reference (Aggregate::GroupKey only): aggregate with a discarded
     // placeholder so the plan is still a hash aggregate over the keys.
@@ -289,34 +298,23 @@ final class SqlEngine(spark: SparkSession) {
         .agg(effAggCols.head, effAggCols.tail: _*).coalesce(1)
     val grouped = if (aggCols.nonEmpty) grouped0 else grouped0.drop("__drop")
 
-    // post-agg scope: key + agg aliases (interval-ness carries through
-    // group keys and MIN/MAX/SUM so e.g. MAX(dur)::text still formats)
-    val postScope: Map[String, Column] =
-      (keyAlias.values ++ aggAlias.values).map(a => a -> col(a)).toMap
-    val postTypes: Map[String, ValueType] =
-      keyAlias.collect { case (k, a) if trans.isInterval(k) =>
-        a -> (ValueType.IntervalT: ValueType) }.toMap ++
-      aggAlias.collect { case (c, a)
-        if Set("min", "max", "sum").contains(c.name) && c.args.nonEmpty &&
-          trans.isInterval(c.args.head) =>
-        a -> (ValueType.IntervalT: ValueType) }
-    val postTrans = new Translator(grouped, postScope, postTypes)
-    val replace: Map[Expr, String] =
-      keyAlias.map { case (k, a) => (k: Expr) -> a } ++
-        aggAlias.map { case (c, a) => (c: Expr) -> a }
+    // post-agg scope: key + agg aliases, typed by their translation (so
+    // e.g. MAX(dur)::text still formats an interval); the scalar
+    // transform *around* an aggregate applies to the aliases (reference A12)
+    val postTrans = new Translator((keyTyped ++ aggTyped).map { case (a, t) =>
+      a -> Typed(col(a), t.tpe) }.toMap)
+    val replace: Map[Expr, String] = keyAlias ++ aggAlias
+    def post(e: Expr): Typed = postTrans.column(Expr.transform(e)(replace.andThen(Expr.ColRef(_))))
 
     val havingFiltered = stmt.having match {
-      case Some(h) =>
-        grouped.filter(graft.core.NullSemantics.boolOf(
-          postTrans.column(trans.rewrite(h, replace))))
+      case Some(h) => grouped.filter(NullSemantics.boolOf(post(h).col))
       case None => grouped
     }
 
     val outCols = stmt.projections.zipWithIndex.map { case ((alias, e), i) =>
-      val rewritten = trans.rewrite(e, replace)
-      postTrans.column(rewritten).as(alias.getOrElse(defaultName(e, i)))
+      alias.getOrElse(defaultName(e, i)) -> post(e)
     }
-    val selected = havingFiltered.select(outCols: _*)
+    val selected = havingFiltered.select(outCols.map(output): _*)
 
     // aggregate DISTINCT only fires when HAVING present (quirk 3)
     val distincted =
@@ -333,6 +331,6 @@ final class SqlEngine(spark: SparkSession) {
     val ordered =
       if (keyOutputNames.nonEmpty) distincted.sortWithinPartitions(keyOutputNames.map(col): _*)
       else distincted
-    stmt.limit.map(ordered.limit).getOrElse(ordered)
+    (stmt.limit.map(ordered.limit).getOrElse(ordered), outCols.map(_._2.tpe))
   }
 }

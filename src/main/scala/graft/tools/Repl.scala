@@ -91,16 +91,6 @@ object Repl {
     case other :: _ => throw new IllegalArgumentException(s"unknown flag: $other")
   }
 
-  private def typeName(t: ValueType): String = t match {
-    case ValueType.IntT => "int"
-    case ValueType.RealT => "real"
-    case ValueType.BoolT => "boolean"
-    case ValueType.TextT => "text"
-    case ValueType.TimestampT => "timestamp"
-    case ValueType.IntervalT => "interval"
-    case ValueType.ArrayT(e) => typeName(e) + "[]"
-  }
-
   /** Statement-completeness rule (reference InputValidator,
     * `src/main.rs:318-331`): `exit` and `\d` are complete as-is; anything
     * else continues onto the next line until a terminating `;`. */
@@ -163,7 +153,7 @@ object Repl {
         try {
           val td = eng.tableDef(name)
           printTable(Seq("Column", "Type", "Nullable", "Default value"),
-            td.columns.map(c => Seq(c.name, typeName(c.tpe),
+            td.columns.map(c => Seq(c.name, c.tpe.name,
               (!c.notNull).toString, c.default.map(_.toString).getOrElse("NULL"))))
         } catch {
           case _: IllegalArgumentException =>

@@ -2,7 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.types.LongType
+
 import graft.sources.Sinks
+import graft.sql.SqlEngine
 
 /** Output sink formats (reference `src/executor.rs:255-309`,
   * `Value::Display` at `src/model.rs:335-353`): strings single-quoted,
@@ -46,5 +49,20 @@ class SinksSpec extends SparkSpec {
     val raw = Seq("raw line 1", "raw line 2").toDF("input")
     assert(Sinks.text(raw).as[String].collect().toSeq ===
       Seq("raw line 1", "raw line 2"))
+  }
+
+  test("an INTERVAL output prints as HH:MM:SS.mmm in text and csv, micros in json") {
+    val e = new SqlEngine(spark)
+    e.addTables("CREATE TABLE dur(line = '(\\\\d+:\\\\d+:\\\\d+) (\\\\S+)', " +
+      "line[1] => took INTERVAL, line[2] => tag TEXT);")
+    // the second line's interval is out of range, so `took` is NULL there
+    val out = e.query("SELECT tag, took FROM dur", Seq("01:00:30 a", "9999999999:00:00 b").toDF("value"))
+    assert(out.schema("took").dataType === LongType) // API callers keep micros
+    assert(Sinks.text(out).as[String].collect().toSeq ===
+      Seq("tag: 'a', took: 01:00:30.000", "tag: 'b', took: NULL"))
+    assert(Sinks.csv(out).as[String].collect().toSeq ===
+      Seq("tag;took", "'a';01:00:30.000", "'b';NULL"))
+    assert(Sinks.json(out).as[String].collect().toSeq ===
+      Seq("""{"tag":"a","took":3630000000}""", """{"tag":"b","took":null}"""))
   }
 }

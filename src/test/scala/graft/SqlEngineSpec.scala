@@ -294,6 +294,11 @@ class SqlEngineSpec extends SparkSpec {
     // interval-ness carries through MAX (reference Value::Interval at agg)
     val mx = e.query("SELECT MAX(took)::text AS m FROM dur", lines).collect()
     assert(mx(0).getString(0) === "12:10:05.000")
+    // ... and through AVG and abs (reference A5 interval avg, §2.3 abs)
+    val av = e.query("SELECT AVG(took)::text AS m FROM dur", lines).collect()
+    assert(av(0).getString(0) === "06:35:17.500")
+    val ab = e.query("SELECT tag, abs(took)::text AS a FROM dur", lines).orderBy("tag").collect()
+    assert(ab.map(_.getString(1)).toSeq === Seq("01:00:30.000", "12:10:05.000"))
     // ts - ts is an interval: ::int gives elapsed seconds
     val diff = e.query(
       "SELECT (make_timestamp(2024,1,1,2,0,0,0) - make_timestamp(2024,1,1,0,30,0,0))::int AS d FROM dur LIMIT 1",

@@ -117,7 +117,7 @@ class ReplGoldenSpec extends SparkSpec {
   test("completion offers every function name the Translator accepts") {
     val words = Repl.completionWords(new SqlEngine(spark)).toSet
     assert(Set("REGEX_MATCHES", "CREATE_ARRAY").subsetOf(words))
-    val t = new Translator(spark.range(1).toDF(), Map.empty)
+    val t = new Translator(Map.empty)
     (Expr.aggregateNames ++ Expr.scalarNames).foreach { n =>
       assert(words(n.toUpperCase), s"$n does not complete")
       // called without arguments, an accepted name fails on them, not on the name
