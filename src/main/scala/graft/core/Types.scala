@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
   * Reference type system: `ValueType` (reference `src/model.rs:356-364`) —
   * INT (i64), REAL (f64), BOOLEAN, TEXT, TIMESTAMP, INTERVAL, and nested
   * arrays `t[]` (`src/model.rs:396-411`). No decimal/map/struct/date.
-  * [[ValueType.NullT]] is the type of the NULL literal only.
+  * [[ValueType.NullT]] is the type of the NULL literal only (and of a Spark
+  * type with no sqlgrep type, to [[ValueType.of]]).
   */
 sealed trait ValueType { def spark: DataType; def name: String }
 object ValueType {
@@ -22,7 +23,7 @@ object ValueType {
   }
   /** Stored as microseconds (LongType) internally; the reference prints
     * intervals as `HH:MM:SS.mmm` (`src/model.rs:345-350`) — see
-    * [[NullSemantics.formatInterval]]. */
+    * [[ValueFormat.display]]. */
   case object IntervalT extends ValueType { val spark: DataType = LongType; val name = "interval" }
   final case class ArrayT(elem: ValueType) extends ValueType {
     def spark: DataType = ArrayType(elem.spark, containsNull = true)
@@ -41,16 +42,28 @@ object ValueType {
       .getOrElse(throw new IllegalArgumentException(s"unknown type: ${t.toLowerCase}"))
   }
 
-  /** Spark column metadata that marks an output column as INTERVAL, which
-    * Spark sees as LongType micros; the text and CSV sinks print tagged
-    * columns as `HH:MM:SS.mmm`. */
+  /** Spark column metadata carrying an output column's sqlgrep type,
+    * for a type Spark's does not tell: INTERVAL is LongType micros. */
   private val Key = "sqlgrep_type"
-  val IntervalTag: Metadata = new MetadataBuilder().putString(Key, IntervalT.name).build()
-  def tagged(f: StructField): Boolean =
-    f.metadata.contains(Key) && f.metadata.getString(Key) == IntervalT.name
+  def tag(t: ValueType): Metadata = new MetadataBuilder().putString(Key, t.name).build()
+
+  /** An output field's sqlgrep type: its tag, else its Spark type's. A
+    * Spark type sqlgrep has none for maps to [[NullT]], which displays
+    * as Spark's string. */
+  def of(f: StructField): ValueType =
+    if (f.metadata.contains(Key)) parse(f.metadata.getString(Key)) else of(f.dataType)
+  def of(dt: DataType): ValueType = dt match {
+    case LongType | IntegerType | ShortType | ByteType => IntT
+    case DoubleType | FloatType => RealT
+    case BooleanType => BoolT
+    case _: StringType => TextT
+    case TimestampType | TimestampNTZType => TimestampT // parquet reads naive ones as NTZ
+    case ArrayType(e, _) => ArrayT(of(e))
+    case _ => NullT
+  }
 }
 
-/** Null-semantics and display-format parity helpers.
+/** Null-semantics parity helpers.
   *
   * The reference's comparison operators return `false` (never NULL) when
   * either side is NULL (`src/execution/expression_execution.rs:60-70`), and
@@ -72,15 +85,4 @@ object NullSemantics {
     * (`src/execution/expression_execution.rs:73-81`). */
   def is(l: Column, r: Column): Column = l <=> r
   def isNot(l: Column, r: Column): Column = !(l <=> r)
-
-  /** Reference interval display `HH:MM:SS.mmm` (`src/model.rs:345-350`).
-    * Input: interval in microseconds. */
-  def formatInterval(micros: Column): Column = {
-    val totalMs = (micros / 1000L).cast(LongType)
-    val h = (totalMs / 3600000L).cast(LongType)
-    val m = ((totalMs % 3600000L) / 60000L).cast(LongType)
-    val s = ((totalMs % 60000L) / 1000L).cast(LongType)
-    val ms = totalMs % 1000L
-    format_string("%02d:%02d:%02d.%03d", h, m, s, ms)
-  }
 }

@@ -54,27 +54,6 @@ object SqlgrepFunctions {
   def intervalToRealSeconds(micros: Column): Column =
     call_function("div", micros, lit(1000L)).cast(DoubleType) / 1000.0
 
-  /** `'H:M:S'::interval` — ValueType::parse (`src/model.rs:386-392`):
-    * failure yields NULL. Each part must be a whole number
-    * (`i64::from_str` — rejects `3.5`, which a bare non-ANSI Spark cast
-    * would silently truncate to 3); a huge part overflows the cast to
-    * NULL in both engines. */
-  def parseInterval(s: Column): Column = {
-    val p = split(s, ":")
-    val whole = "^[+-]?\\d+$"
-    // Magnitude gate: 2e9 per part keeps the worst-case micros sum
-    // (2e9*3.6e9 + 2e9*6e7 + 2e9*1e6 ≈ 7.3e18) inside i64 — without it
-    // a part like 2562048 hours passes the whole-number check but the
-    // multiplication wraps silently in non-ANSI Spark (the reference's
-    // chrono construction fails to build such a Duration instead).
-    def part(i: Int): Column = {
-      val v = p.getItem(i).cast(LongType)
-      when(p.getItem(i).rlike(whole) && abs(v) <= 2000000000L, v)
-    }
-    when(size(p) === 3,
-      part(0) * 3600000000L + part(1) * 60000000L + part(2) * 1000000L)
-  }
-
   /** `EXTRACT(part FROM ts)` — reference parts: epoch (float secs),
     * year, month, day, hour, minute, second
     * (reference `src/execution/expression_execution.rs:417-458`). */

@@ -14,10 +14,11 @@ import graft.functions.RegexCaptures
   * Design: each declared pattern becomes ONE [[RegexCaptures]] / `split`
   * column evaluated once per line (the reference's shared pattern bank,
   * `src/data_model.rs:172-199`); every table column is then a cheap
-  * `element_at` + typed conversion over that shared array. The whole stage
-  * is declarative Catalyst — codegen'd, partition-parallel, and column-
-  * prunable (Catalyst drops unused pattern columns automatically, something
-  * the reference cannot do: it always extracts every declared column).
+  * `element_at` over that shared array, parsed to its declared type by
+  * [[ValueFormat.parse]]. The whole stage is declarative Catalyst —
+  * codegen'd, partition-parallel, and column-prunable (Catalyst drops
+  * unused pattern columns automatically, something the reference cannot
+  * do: it always extracts every declared column).
   */
 object Extractor {
 
@@ -67,7 +68,7 @@ object Extractor {
           // dodge NOT NULL vetoes (reference data_model.rs:339-353).
           case ValueType.BoolT =>
             when(col(capCols(g.pattern)).isNotNull, groupVal(g).isNotNull)
-          case t => convertTo(groupVal(g), t)
+          case t => ValueFormat.parse(groupVal(g), t)
         }
 
         case ColumnSource.MultiGroup(refs) =>
@@ -76,7 +77,7 @@ object Extractor {
             case other => throw new IllegalArgumentException(
               s"multi-group column ${c.name} must be an array type, got $other")
           }
-          val elems = refs.map(g => convertTo(groupVal(g), elemT))
+          val elems = refs.map(g => ValueFormat.parse(groupVal(g), elemT))
           // NULL iff ALL elements are null (reference src/data_model.rs:236-248).
           val anyNonNull = elems.map(_.isNotNull).reduce(_ || _)
           when(anyNonNull, array(elems: _*))
@@ -86,12 +87,10 @@ object Extractor {
 
         case ColumnSource.Json(path) =>
           val v = get_json_object(line, path)
-          if (c.convert) convertTo(v, c.tpe) // CONVERT: JSON string -> declared type
-          else c.tpe match {
-            case ValueType.ArrayT(e) =>
+          c.tpe match { // get_json_object gives text, CONVERT or not
+            case ValueType.ArrayT(e) if !c.convert =>
               from_json(v, ArrayType(e.spark, containsNull = true))
-            case ValueType.BoolT => try_cast_to(v, BooleanType)
-            case t => convertTo(v, t)
+            case t => ValueFormat.parse(v, t)
           }
       }
       val trimmed = if (c.trim) trim(raw) else raw
@@ -133,29 +132,17 @@ object Extractor {
     case ColumnSource.Json(_) => Nil
   }
 
-  /** String → declared type, reference `ValueType::parse`
-    * (`src/model.rs:367-394`): failure yields NULL, never an error. */
-  private[graft] def convertTo(s: Column, t: ValueType): Column = t match {
-    case ValueType.TextT => s
-    case ValueType.IntT => try_cast_to(s, LongType)
-    case ValueType.RealT => try_cast_to(s, DoubleType)
-    case ValueType.BoolT => try_cast_to(s, BooleanType)
-    case ValueType.TimestampT =>
-      // reference accepts '%Y-%m-%d %H:%M:%S' (src/model.rs:378-384)
-      try_to_timestamp(s, lit("yyyy-MM-dd HH:mm:ss"))
-    case ValueType.IntervalT => graft.functions.SqlgrepFunctions.parseInterval(s)
-    case ValueType.ArrayT(_) | ValueType.NullT => throw new IllegalArgumentException(
-      "nested array string-parse not supported; use JSON source")
-  }
-
   /** Month-name or numeric month (reference `src/data_model.rs:280-296`).
     * Name lookup is one codegen'd [[graft.functions.MonthNum]] call — a
     * 12-arm `when(lower(substring(m,1,3)) === ...)` chain re-inlines the
     * substring+lowercase per arm AND per call site (the row-match filter
     * substitutes the whole projection), which bloated the generated
-    * method past JIT quality thresholds (see MonthNum scaladoc). */
+    * method past JIT quality thresholds (see MonthNum scaladoc). The
+    * numeric probe fails on every month-name line, so it is a plain
+    * non-ANSI `cast`, NULL without the exception per value that
+    * `try_cast` throws and catches (once 9% of executor samples). */
   private[graft] def monthNum(m: Column): Column =
-    coalesce(try_cast_to(m, IntegerType), graft.functions.MonthNum(m))
+    coalesce(m.cast(IntegerType), graft.functions.MonthNum(m))
 
   /** Compose a timestamp from capture groups in order
     * year, month, day, hour, minute, second, [fraction]
@@ -171,26 +158,15 @@ object Extractor {
   private def timestampFromGroups(gs: Seq[Column], micros: Boolean): Column = {
     require(gs.length == 6 || gs.length == 7,
       s"timestamp needs 6-7 groups, got ${gs.length}")
-    val Seq(y, mo, d, h, mi, s) = gs.take(6).map(g => try_cast_to(g, IntegerType))
+    val Seq(y, mo, d, h, mi, s) = gs.take(6).map(_.cast(IntegerType))
       .zipWithIndex.map { case (c, i) => if (i == 1) monthNum(gs(1)) else c }
     val secMicros: Column = {
-      val whole = try_cast_to(s, LongType) * 1000000L
+      val whole = s.cast(LongType) * 1000000L
       if (gs.length == 7) {
-        val frac = try_cast_to(gs(6), LongType)
+        val frac = gs(6).cast(LongType)
         whole + coalesce(if (micros) frac else frac * 1000L, lit(0L))
       } else whole
     }
     graft.functions.ComposeTimestamp(y, mo, d, h, mi, secMicros)
   }
-
-  // ---- failure-tolerant conversions. The library requires
-  // spark.sql.ansi.enabled=false (reference parity: bad casts yield NULL,
-  // SURVEY.md §8) — under which plain `cast` is the exception-FREE null-
-  // on-failure path. `try_cast` would give the same *semantics* under
-  // ANSI, but it implements them by throwing and catching
-  // NumberFormatException per failing row; with month-name columns that
-  // fail the numeric cast on EVERY line, fillInStackTrace was 9% of all
-  // executor samples and serialized the 32-core parse stage.
-  private[graft] def try_cast_to(c: Column, t: DataType): Column =
-    c.cast(t)
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.table.{Manifest, ManifestTable, SinkLineage}
 
@@ -57,18 +58,19 @@ object PipelineJob {
         .parquet(table.dataDir(snapshotId).toString)
       val m = obs.get
       val mIn = obsIn.get
-      table.writeMarker(snapshotId, DataDone,
-        s"""{"rows_in":${mIn("rows_in")},"rows_routed":${m("rows_routed")},""" +
-          s""""tokens_routed":${m("tokens_routed")}}""")
+      table.writeMarker(snapshotId, DataDone, Manifest.json.writeValueAsString(Map(
+        "rows_in" -> mIn("rows_in"), "rows_routed" -> m("rows_routed"),
+        "tokens_routed" -> m("tokens_routed")).asJava))
     }
 
     table.commit(snapshotId, table.dataSinks(snapshotId).map { case (sink, path) =>
-      SinkLineage(sink, spark.read.parquet(path).count(), path) })
+      SinkLineage(sink, table.load(spark, path).count(), path) })
   }
 
   def metrics(tableRoot: String, snapshotId: Long): Option[RunMetrics] =
     new ManifestTable(tableRoot).marker(snapshotId, DataDone).flatMap { s =>
-      def f(n: String) = ("\"" + n + "\":(\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
+      val o = Manifest.json.readTree(s)
+      def f(n: String) = Option(o.get(n)).map(_.longValue)
       for (r <- f("rows_routed"); t <- f("tokens_routed"))
         yield RunMetrics(f("rows_in").getOrElse(r), r, t)
     }

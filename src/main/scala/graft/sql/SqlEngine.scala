@@ -51,7 +51,7 @@ object RunStats {
   *
   * A [[Translator]] types each SELECT's expressions from the declared
   * column types. An INTERVAL output stays LongType micros and carries
-  * [[ValueType.IntervalTag]] for the text and CSV sinks.
+  * its sqlgrep type as a [[ValueType.tag]] for the text and CSV sinks.
   *
   * `execute(..., stats = true)` is the `--show-run-stats` surface: the
   * SELECT runs the same plan, and [[RunStats.of]] reads its line and
@@ -245,9 +245,10 @@ final class SqlEngine(spark: SparkSession) {
     (stmt.limit.map(distincted.limit).getOrElse(distincted), cols.map(_._2.tpe))
   }
 
-  /** `t` as output column `name`; an INTERVAL carries [[ValueType.IntervalTag]]. */
+  /** `t` as output column `name`, tagged where its Spark type does not
+    * tell its sqlgrep type (an INTERVAL, or an array of them). */
   private def output(named: (String, Typed)): Column = named match { case (name, Typed(c, t)) =>
-    if (t == ValueType.IntervalT) c.as(name, ValueType.IntervalTag) else c.as(name) }
+    if (ValueType.of(t.spark) == t) c.as(name) else c.as(name, ValueType.tag(t)) }
 
   private def defaultName(e: Expr, i: Int): String = e match {
     case Expr.ColRef(n, _) => n // parser_tree_converter.rs:117-122

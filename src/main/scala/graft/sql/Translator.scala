@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{NullSemantics, ValueType}
+import graft.core.{NullSemantics, ValueFormat, ValueType}
 import graft.functions.{Aggregates, SqlgrepFunctions}
 
 /** A translated expression and its sqlgrep type, whose `spark` is the
@@ -21,6 +21,7 @@ final case class Typed(col: Column, tpe: ValueType)
   * expression's type comes from its children's in the same recursion
   * that builds its Column, and decides integer division, `pow`, TS±INT,
   * TS−TS, string↔timestamp comparison, the `::` casts and integer AVG.
+  * A `::` cast parses and displays text through [[ValueFormat]].
   * Types follow Spark's coercion (`TypedTranslationPropSpec` checks them
   * against Spark's); INTERVAL survives interval ± interval, TS−TS,
   * `::interval`, unary minus, abs, greatest/least, CASE, arrays and
@@ -171,30 +172,30 @@ final class Translator(scope: Map[String, Typed]) {
       Typed(when(r.col >= 0, pow(l.col, r.col).cast(LongType)), IntT)
     else Typed(pow(l.col, r.col), RealT)
 
-  /** `expr::type` (reference expression_execution.rs:533-559): interval
-    * casts are special-cased BEFORE the generic rules — ::int yields
-    * whole seconds, ::real fractional seconds at millisecond resolution
-    * (num_milliseconds()/1000.0), ::text the HH:MM:SS.mmm Display form. */
+  /** `expr::type` (reference expression_execution.rs:533-559, SURVEY
+    * P10): TEXT parses to the type and any other type displays as text,
+    * both through [[ValueFormat]]; `::text` of TEXT is the identity.
+    * Interval casts come before the generic rules: ::int yields whole
+    * seconds, ::real fractional seconds at millisecond resolution
+    * (num_milliseconds()/1000.0). Only a TIMESTAMP or NULL casts to
+    * TIMESTAMP unparsed; any other type is a type error. */
   private def castTo(x: Typed, t: ValueType): Typed = {
     val c = x.col
     (t, x.tpe) match {
+      case (_: ArrayT | NullT, _) => throw new IllegalArgumentException(s"cannot cast to ${t.name}")
+      case (TextT, TextT) => x
+      case (TextT, from) => Typed(ValueFormat.display(c, from), TextT)
+      case (_, TextT) => Typed(ValueFormat.parse(c, t), t)
       case (IntT, IntervalT) => Typed(SqlgrepFunctions.intervalToIntSeconds(c), IntT)
       case (RealT, IntervalT) => Typed(SqlgrepFunctions.intervalToRealSeconds(c), RealT)
-      case (TextT, IntervalT) => Typed(NullSemantics.formatInterval(c), TextT)
       case (IntT, _) => Typed(c.try_cast(LongType), IntT)
       case (RealT, _) => Typed(c.try_cast(DoubleType), RealT)
       case (BoolT, _) => Typed(c.try_cast(BooleanType), BoolT)
-      // float Display {:.2} (model.rs:335-343)
-      case (TextT, RealT) => Typed(format_string("%.2f", c), TextT)
-      // Display %Y-%m-%d %H:%M:%S.%3f (model.rs:346)
-      case (TextT, TimestampT) => Typed(date_format(c, "yyyy-MM-dd HH:mm:ss.SSS"), TextT)
-      case (TextT, _) => Typed(c.cast(StringType), TextT)
-      case (TimestampT, _) => Typed(to_timestamp(c, "yyyy-MM-dd HH:mm:ss"), TimestampT)
-      // String -> ValueType::parse 'H:M:S' (model.rs:386-392)
-      case (IntervalT, TextT) => Typed(SqlgrepFunctions.parseInterval(c), IntervalT)
+      case (TimestampT, TimestampT | NullT) => Typed(c.cast(TimestampType), TimestampT)
+      case (TimestampT, from) =>
+        throw new IllegalArgumentException(s"cannot cast ${from.name} to timestamp")
       // an integer is micros already; other values keep their type (no reference rule)
-      case (IntervalT, other) => Typed(c, if (integral(other)) IntervalT else other)
-      case (other, _) => throw new IllegalArgumentException(s"cannot cast to ${other.name}")
+      case (IntervalT, from) => Typed(c, if (integral(from)) IntervalT else from)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -36,28 +37,25 @@ final case class Manifest(
     parentId: Option[Long],
     sinks: Seq[SinkLineage]) {
   def toJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-    }
-    val sinksJson = sinks.map(l =>
-      s"""{"sink":"${esc(l.sink)}","rows":${l.rows},"path":"${esc(l.path)}"}""")
-      .mkString("[", ",", "]")
-    s"""{"snapshotId":$snapshotId,"parentId":${parentId.getOrElse("null")},"sinks":$sinksJson}"""
+    val o = Manifest.json.createObjectNode().put("snapshotId", snapshotId)
+    parentId.fold(o.putNull("parentId"))(id => o.put("parentId", id))
+    val arr = o.putArray("sinks")
+    sinks.foreach(l => arr.addObject().put("sink", l.sink).put("rows", l.rows).put("path", l.path))
+    Manifest.json.writeValueAsString(o)
   }
 }
 
 object Manifest {
-  /** Minimal JSON reader for manifests we wrote ourselves. */
+  /** Jackson (Spark's own): writes and reads back any path or id. */
+  private[graft] val json = new ObjectMapper()
+
   def fromJson(s: String): Manifest = {
-    def longField(name: String): Option[Long] =
-      ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-    val sinkRe = """\{"sink":"([^"]*)","rows":(\d+),"path":"([^"]*)"\}""".r
+    val o = json.readTree(s)
     Manifest(
-      snapshotId = longField("snapshotId").getOrElse(
-        throw new IllegalArgumentException(s"bad manifest: $s")),
-      parentId = longField("parentId"),
-      sinks = sinkRe.findAllMatchIn(s).map(m =>
-        SinkLineage(m.group(1), m.group(2).toLong, m.group(3))).toSeq)
+      snapshotId = o.required("snapshotId").longValue,
+      parentId = Option(o.get("parentId")).filterNot(_.isNull).map(_.longValue),
+      sinks = o.required("sinks").elements.asScala.map(l => SinkLineage(
+        l.required("sink").textValue, l.required("rows").longValue, l.required("path").textValue)).toSeq)
   }
 }
 
@@ -111,8 +109,13 @@ class ManifestTable(root: String) {
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val lineage = manifest(id).sinks.find(_.sink == sink).getOrElse(
       throw new IllegalArgumentException(s"sink $sink not in snapshot $id"))
-    spark.read.parquet(lineage.path)
+    load(spark, lineage.path)
   }
+
+  /** A data directory as written: Spark reads a path as a glob, so its
+    * glob characters (a `\` too) are escaped. */
+  def load(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path.replaceAll("""([\\{}\[\]*?])""", """\\$1"""))
 
   /** Every durable write but the data files goes through here. */
   protected def atomicWrite(path: Path, content: String): Unit = {

@@ -94,6 +94,21 @@ class ExtractorSpec extends SparkSpec {
     assert(rows(0).getAs[String]("raw") === "2005;Jun")
   }
 
+  test("INT column: fractional or padded text is NULL, not truncated or trimmed (i64::from_str)") {
+    def ints(tdef: TableDef, lines: Seq[String]): Map[String, Option[Long]] =
+      Extractor.parse(lines.toDF("value"), tdef).collect()
+        .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+    val captured = ints(TableDef("c", Seq(PatternDef("line", "v=(\\S+)")),
+      Seq(ColumnDef("s", ValueType.TextT, g(1)), ColumnDef("n", ValueType.IntT, g(1)))),
+      Seq("v=3.5", "v=42", "v=-7", "v=+7", "v=99999999999999999999", "v=1e3"))
+    assert(captured === Map("3.5" -> None, "42" -> Some(42L), "-7" -> Some(-7L),
+      "+7" -> Some(7L), "99999999999999999999" -> None, "1e3" -> None))
+    val parts = ints(TableDef("p", Seq(PatternDef("line", ";", PatternMode.Split)),
+      Seq(ColumnDef("s", ValueType.TextT, g(1)), ColumnDef("n", ValueType.IntT, g(1)))),
+      Seq(" 42;x", "42\n;x", "42 ;x", "42;x"))
+    assert(parts === Map(" 42" -> None, "42\n" -> None, "42 " -> None, "42" -> Some(42L)))
+  }
+
   test("multi-group array column; NULL iff all elements null (src/data_model.rs:236-248)") {
     val tdef = TableDef("arr",
       Seq(PatternDef("line", "(\\d+)-(\\d+)(?:-(\\d+))?")),
@@ -158,7 +173,7 @@ class ExtractorSpec extends SparkSpec {
       Seq(ColumnDef("elapsed", ValueType.IntervalT, g(1))))
     val rows = Extractor.parse(Seq("elapsed=1:02:03", "elapsed=bogus").toDF("value"), tdef)
       .select(col("elapsed"),
-        graft.core.NullSemantics.formatInterval(col("elapsed")).as("disp"))
+        graft.core.ValueFormat.display(col("elapsed"), ValueType.IntervalT).as("disp"))
       .collect()
     assert(rows.length === 1) // 'bogus' -> NULL -> row doesn't match
     assert(rows(0).getLong(0) === (1L * 3600 + 2 * 60 + 3) * 1000000L)

@@ -291,4 +291,23 @@ class PipelineSpec extends SparkSpec {
       assert(oldRows === N)
     }
   }
+
+  test("manifest and marker JSON round-trip a root with quote and backslash, and a negative id") {
+    withTempDir("mt\"q\\b") { dir =>
+      val root = dir.toString
+      assert(root.contains("\"") && root.contains("\\"))
+      val small = TokenSequences.synthetic(spark, 100L, partitions = 2)
+      val m = PipelineJob.run(spark, small, root, snapshotId = -1L, partitions = 2)
+      assert(m.sinks.map(_.rows).sum === 100L)
+      assert(m.sinks.forall(_.path.startsWith(root)))
+      val table = new ManifestTable(root)
+      assert(table.currentSnapshotId === Some(-1L))
+      assert(table.manifest(-1L) === m)
+      assert(table.read(spark, m.sinks.head.sink).count() === m.sinks.head.rows)
+      assert(PipelineJob.metrics(root, -1L).exists(_.rowsIn === 100L))
+      val m2 = PipelineJob.run(spark, small, root, snapshotId = 2L, partitions = 2)
+      assert(table.manifest(2L).parentId === Some(-1L))
+      assert(table.manifest(2L) === m2)
+    }
+  }
 }

@@ -65,4 +65,16 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.json(out).as[String].collect().toSeq ===
       Seq("""{"tag":"a","took":3630000000}""", """{"tag":"b","took":null}"""))
   }
+
+  test("a NULL REAL prints NULL; an INTERVAL[] output prints HH:MM:SS.mmm elements") {
+    val e = new SqlEngine(spark)
+    e.addTables("CREATE TABLE dur(line = '(\\\\S+) (\\\\S+)', " +
+      "line[1] => took INTERVAL, line[2] => tag TEXT);")
+    val out = e.query("SELECT tag::real AS r, create_array(took, NULL) AS ds FROM dur",
+      Seq("01:00:30 a", "9999999999:00:00 2.5").toDF("value"))
+    assert(Sinks.text(out).as[String].collect().toSeq ===
+      Seq("r: NULL, ds: {01:00:30.000, NULL}", "r: 2.50, ds: {NULL, NULL}"))
+    assert(Sinks.csv(out).as[String].collect().toSeq ===
+      Seq("r;ds", "NULL;{01:00:30.000, NULL}", "2.50;{NULL, NULL}"))
+  }
 }

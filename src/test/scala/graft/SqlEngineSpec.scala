@@ -427,4 +427,50 @@ class SqlEngineSpec extends SparkSpec {
       assert(avgs(g) === expect, s"group $g: ${vs.mkString(",")}")
     }
   }
+
+  /** Each output row as its first column (TEXT) -> the other columns,
+    * NULL as None. */
+  private def byFirst(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Option[Any]]] =
+    df.collect().map(r => r.getString(0) -> (1 until r.length).map(i => Option(r.get(i)))).toMap
+
+  test("INT parse is i64::from_str: fractional or padded text is NULL as a column and via ::int") {
+    val e = new SqlEngine(spark)
+    e.addTables("CREATE TABLE c(line = 'v=(\\\\S+)', line[1] => s TEXT, line[1] => n INT);" +
+      "CREATE TABLE p(line = split ';', line[1] => s TEXT, line[1] => n INT);")
+    val captured = byFirst(e.query("SELECT s, n, s::int AS m FROM c",
+      Seq("v=3.5", "v=42", "v=-7").toDF("value")))
+    assert(captured === Map("3.5" -> Seq(None, None), "42" -> Seq(Some(42L), Some(42L)),
+      "-7" -> Seq(Some(-7L), Some(-7L))))
+    val parts = byFirst(e.query("SELECT s, n, s::int AS m FROM p",
+      Seq(" 42;x", "42\n;x", "+42;x", "99999999999999999999;x").toDF("value")))
+    assert(parts === Map(" 42" -> Seq(None, None), "42\n" -> Seq(None, None),
+      "+42" -> Seq(Some(42L), Some(42L)), "99999999999999999999" -> Seq(None, None)))
+    assert(e.query("SELECT '1.5'::int AS a, ' 42'::int AS b, '42\n'::int AS c FROM p",
+      Seq("x").toDF("value")).collect().toSeq === Seq(Row(null, null, null)))
+  }
+
+  test("::text is Display for every non-TEXT type, arrays included, and NULL on NULL") {
+    val e = new SqlEngine(spark)
+    e.addTables("CREATE TABLE t(line = '(.+)', line[1] => s TEXT);")
+    val rows = e.query("SELECT s, create_array(s, 'b')::text AS a, (1.5)::text AS r, (2)::text AS i, " +
+      "TRUE::text AS b, s::text AS t, (s::real)::text AS nr, ((s)::interval)::text AS d FROM t",
+      Seq("x", "1:2:3").toDF("value"))
+    assert(byFirst(rows) === Map(
+      "x" -> Seq("{'x', 'b'}", "1.50", "2", "true", "x", null, null).map(Option(_)),
+      "1:2:3" -> Seq("{'1:2:3', 'b'}", "1.50", "2", "true", "1:2:3", null, "01:02:03.000").map(Option(_))))
+  }
+
+  test("::timestamp parses TEXT, passes TIMESTAMP and NULL, and is a type error for the rest") {
+    val e = new SqlEngine(spark)
+    e.addTables("CREATE TABLE t(line = '(\\\\d+) (.+)', line[1] => n INT, line[2] => s TEXT);")
+    val lines = Seq("5 2024-01-02 03:04:05").toDF("value")
+    assert(e.query("SELECT (s::timestamp)::text AS a, ((s::timestamp)::timestamp)::text AS b, " +
+      "NULL::timestamp AS c FROM t", lines).collect().toSeq ===
+      Seq(Row("2024-01-02 03:04:05.000", "2024-01-02 03:04:05.000", null)))
+    Seq("n" -> "int", "1.5" -> "real", "TRUE" -> "boolean", "s::interval" -> "interval",
+      "array[s]" -> "text[]").foreach { case (x, t) =>
+      val err = intercept[IllegalArgumentException](e.query(s"SELECT ($x)::timestamp AS v FROM t", lines))
+      assert(err.getMessage === s"cannot cast $t to timestamp")
+    }
+  }
 }
